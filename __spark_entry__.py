@@ -992,12 +992,16 @@ def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = (
         li.filter(F.col("l_partkey").isNotNull())
-        .select("l_returnflag", "l_partkey")
+        .select(F.col("l_returnflag").alias("_flag"), "l_partkey")
         .distinct()
-        .groupBy("l_returnflag")
-        .agg(F.count("*").alias("n_parts"))
+        .groupBy("_flag")
+        .agg(F.count("*").alias("_nd"))
     )
-    agg = sk.join(nd, "l_returnflag")
+    # NULL-safe LEFT join back: a NULL return flag is a group of its own,
+    # and a group whose part keys are all NULL counts 0 distinct parts
+    agg = sk.join(nd, sk["l_returnflag"].eqNullSafe(nd["_flag"]), "left").withColumn(
+        "n_parts", F.coalesce(F.col("_nd"), F.lit(0).cast("long"))
+    )
     return agg.select(
         "l_returnflag",
         "n_parts",

@@ -130,9 +130,9 @@ class GraphStore:
 
         if dedup_key and os.path.isdir(path):
             existing, n_pruned = self._existing_for_dedup(path, out, partition_by)
-            out = out.join(
-                existing.select(*dedup_key).distinct(), dedup_key, "left_anti"
-            )
+            # no distinct() on the existing keys: an anti-join's result does
+            # not depend on duplicates on its right side
+            out = out.join(existing.select(*dedup_key), dedup_key, "left_anti")
 
         # lineage WITHOUT a second pass: the row count rides on the write
         # itself via df.observe (one job, one scan — a pre-write

@@ -16,9 +16,17 @@ relationships, driven by the metadata model:
 - R9 refactor_all orchestration (model_applier.py:96-135)
 
 The reference loops classes/relationships on the driver, one Cypher call
-each, serially — its chief scalability limit (SURVEY §3.3). Here each
-class extraction and each relationship link is an independent lazy
-DataFrame; one union materializes them all in a single Spark job wave.
+each, serially — its chief scalability limit (SURVEY §3.3). Here
+``refactor_all`` reads the batch ONCE: one projection
+computes every spec's presence flag, node id, label, uri and props per
+source row, and nodes, row_map and edges are each a single explode of an
+array of per-row structs (``when(present, struct(...))``) cut from it.
+Typed relationships are (relationship, from-spec, to-spec) pairs
+enumerated on the driver from the metadata, so "both ends extracted from
+the same source row" needs no join — a per-class union re-scans the
+batch once per branch and a ``row_id`` self-join re-scans it per side.
+``link_classes`` (the row_map self-join) remains for ``reshape_all``,
+which links a graph read back from storage.
 
 Row identity: Neo4j gives every loaded row a node id. A distributed,
 resumable engine derives ``row_id = xxhash64(domain, <all columns>)`` —
@@ -30,7 +38,9 @@ is documented here and tested).
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +51,8 @@ from tab2neo_spark.model.metadata import MetadataModel
 FROM_DATA = "FROM_DATA"
 IS_A = "IS_A"
 TERM = "Term"
+LABEL_PROPS = ("rdfs_label", "rdfs:label")
+NULL_MARK = "\x00"  # distinguishes a null value from the string 'null'
 
 
 @dataclass
@@ -75,6 +87,10 @@ def plan_extraction(model: MetadataModel, table_class: str) -> list[ExtractionSp
 
     ``create``-mode classes come from ``ClassSpec.create``
     (model_applier.py:220-224).
+
+    At most one spec per class: two relationships ``table_class -> C``
+    (different types) still extract C once — a second spec would duplicate
+    C's row_map rows and FROM_DATA edges.
     """
     specs = []
     by_class: dict[str, list] = {}
@@ -89,12 +105,14 @@ def plan_extraction(model: MetadataModel, table_class: str) -> list[ExtractionSp
                 mode="create" if (cls and cls.create) else "merge",
             )
         )
+    seen = set(by_class)
     for rel in model.relationships:
-        if rel.from_label != table_class or rel.to_label in by_class:
+        if rel.from_label != table_class or rel.to_label in seen:
             continue
         cls = model.classes.get(rel.to_label)
         if cls is None:
             continue
+        seen.add(cls.label)
         specs.append(
             ExtractionSpec(
                 class_label=cls.label,
@@ -112,22 +130,26 @@ class RefactorEngine:
 
     # -- R2 -------------------------------------------------------------------
 
-    def with_row_ids(self, df: DataFrame, domain: str) -> DataFrame:
-        """Deterministic source-row identity (the Source Data Row analog)."""
-        return df.withColumn(
-            "_row_id", F.xxhash64(F.lit(domain), *[F.col(c) for c in df.columns])
-        ).dropDuplicates(["_row_id"])
+    def _project(
+        self,
+        df: DataFrame,
+        specs: list[ExtractionSpec],
+        domain: str,
+        row_class: str | None = None,
+    ) -> tuple[DataFrame, list[str]]:
+        """The one per-row projection every refactor output is cut from.
 
-    def extract_class_entities(
-        self, df: DataFrame, specs: list[ExtractionSpec], domain: str
-    ) -> RefactorResult:
-        """R2: entity nodes per spec + FROM_DATA provenance edges.
+        Slot ``i`` — one per spec, plus a row-node pseudo-spec of class
+        ``row_class`` when given — is five columns: ``_p{i}`` presence,
+        ``_n{i}`` node_id, ``_l{i}`` rdfs_label, ``_u{i}`` uri, ``_m{i}``
+        props. Returns (projection, class label per slot). Outputs read the
+        slot columns, so each per-spec expression runs once per row however
+        many structs use it (the projection is the CSE boundary), and
+        columns an output does not read are pruned from its plan.
 
         merge-mode id = xxhash64(class, value-tuple): equal mapped-value
-        combinations collapse globally WITHOUT a shuffle-dedup — downstream
-        writes dedup on the deterministic key instead
-        (materialize.write_stage). create-mode id adds row_id to the hash:
-        one node per source row (model_applier.py:246-251).
+        combinations collapse globally; create-mode id adds row_id to the
+        hash: one node per source row (model_applier.py:246-251).
 
         Multi-property specs (MAPS_TO_PROPERTY mode): ALL (column ->
         property) pairs of a spec land on ONE node, whose merge identity is
@@ -135,78 +157,134 @@ class RefactorEngine:
         test_extract_entities.py part_2_D: car{color,make} nodes merge per
         (color, make) pair. The pair whose property is rdfs_label feeds the
         canonical value column; every other pair goes into the open props
-        map. Rows where every mapped value is null are skipped (null keys
-        must not merge — CLD_NAN discipline, action.py:1656-1660).
+        map. A spec is present in a row unless every mapped value is null
+        (null keys must not merge — CLD_NAN discipline,
+        action.py:1656-1660).
+
+        The row pseudo-spec is present when any spec is: a row with no
+        entity gets no row node.
+
+        ``_row_id`` is the deterministic source-row identity (the Source
+        Data Row analog). Byte-identical duplicate rows share it, so they
+        yield identical structs, which each output's dedup collapses — the
+        batch needs no row-dedup shuffle of its own.
         """
-        rows = self.with_row_ids(df, domain)
-        NULL_MARK = "\x00"  # distinguishes null from the string 'null'
-
-        node_parts = []
-        rowmap_parts = []
-        for spec in specs:
-            pairs = [(src, prop) for src, prop in spec.columns]
-            vals = [F.col(src).cast("string") for src, _ in pairs]
-            any_present = vals[0].isNotNull()
-            for v in vals[1:]:
-                any_present = any_present | v.isNotNull()
-            base = rows.filter(any_present)
-
+        row_id = F.col("_row_id")
+        rows = df.withColumn(
+            "_row_id", F.xxhash64(F.lit(domain), *[F.col(c) for c in df.columns])
+        )
+        cols, present = [row_id], []
+        for i, spec in enumerate(specs):
+            vals = [F.col(src).cast("string") for src, _ in spec.columns]
+            present.append(reduce(operator.or_, [v.isNotNull() for v in vals]))
             key_parts = [F.coalesce(v, F.lit(NULL_MARK)) for v in vals]
-            if spec.mode == "create":
-                node_id = F.xxhash64(F.lit(spec.class_label), F.col("_row_id"), *key_parts)
-            else:
-                node_id = F.xxhash64(F.lit(spec.class_label), *key_parts)
-
-            rdfs_vals = [v for (_, prop), v in zip(pairs, vals)
-                         if prop in ("rdfs_label", "rdfs:label")]
-            rdfs_label = rdfs_vals[0] if rdfs_vals else F.lit(None).cast("string")
+            salt = [row_id] if spec.mode == "create" else []
+            labels = [v for (_, prop), v in zip(spec.columns, vals) if prop in LABEL_PROPS]
             prop_entries = [
-                (prop, v)
-                for (_, prop), v in zip(pairs, vals)
-                if prop not in ("rdfs_label", "rdfs:label")
+                (prop, v) for (_, prop), v in zip(spec.columns, vals)
+                if prop not in LABEL_PROPS
             ]
             if prop_entries:
                 props = F.map_filter(
-                    F.create_map(
-                        *[x for p, v in prop_entries for x in (F.lit(p), v)]
-                    ),
+                    F.create_map(*[x for p, v in prop_entries for x in (F.lit(p), v)]),
                     lambda k, v: v.isNotNull(),
                 )
             else:
                 props = F.lit(None).cast("map<string,string>")
+            cols += [
+                present[-1].alias(f"_p{i}"),
+                F.xxhash64(F.lit(spec.class_label), *salt, *key_parts).alias(f"_n{i}"),
+                (labels[0] if labels else F.lit(None).cast("string")).alias(f"_l{i}"),
+                S.node_uri_col(F.lit(spec.class_label), *vals).alias(f"_u{i}"),
+                props.alias(f"_m{i}"),
+            ]
+        classes = [s.class_label for s in specs]
+        if row_class is not None:
+            i = len(classes)
+            cols += [
+                reduce(operator.or_, present).alias(f"_p{i}"),
+                row_id.alias(f"_n{i}"),
+                row_id.cast("string").alias(f"_l{i}"),
+                F.lit(None).cast("string").alias(f"_u{i}"),
+                F.lit(None).cast("map<string,string>").alias(f"_m{i}"),
+            ]
+            classes.append(row_class)
+        return rows.select(*cols), classes
 
-            part = base.select(
-                node_id.alias("node_id"),
-                F.lit(spec.class_label).alias("class"),
-                rdfs_label.alias("rdfs_label"),
-                S.node_uri_col(F.lit(spec.class_label), *vals).alias("uri"),
-                props.alias("props"),
-                F.col("_row_id"),
-            )
-            rowmap_parts.append(
-                part.select(F.col("_row_id").alias("row_id"), "class", "node_id")
-            )
-            node_parts.append(part.drop("_row_id"))
+    def _rel_pairs(self, classes: list[str]) -> list[tuple[str, int, int]]:
+        """R3 on the projection: (rel_type, from-slot, to-slot) for every
+        schema relationship whose two ends are both slots. Both slots are
+        columns of the same projected row, so "extracted from the same
+        source row" — what ``link_classes`` gets from its self-join on
+        row_id — needs no join."""
+        return [
+            (rel.relationship_type, i, j)
+            for rel in self.model.relationships
+            for i, a in enumerate(classes) if a == rel.from_label
+            for j, b in enumerate(classes) if b == rel.to_label
+        ]
 
-        all_nodes = node_parts[0]
-        for p in node_parts[1:]:
-            all_nodes = all_nodes.unionByName(p)
+    def _cut(
+        self, proj: DataFrame, classes: list[str], n_specs: int, linked: bool
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(nodes, row_map, edges) of a ``_project`` result, each ONE
+        explode of an array of per-row ``when(present, struct)`` values
+        followed by one dedup. Edges are FROM_DATA (entity slots only) and,
+        when ``linked``, the typed relationships and IS_A of every slot."""
+
+        def fan_out(structs: list) -> DataFrame:
+            return proj.select(F.inline(F.array_compact(F.array(*structs))))
+
+        def edge(present, src, rel_type: str, dst):
+            return F.when(present, F.struct(
+                src.alias("src"), F.lit(rel_type).alias("rel_type"), dst.alias("dst")
+            ))
+
+        p = [F.col(f"_p{i}") for i in range(len(classes))]
+        n = [F.col(f"_n{i}") for i in range(len(classes))]
         # merge-mode duplicates collapse on the deterministic id; at write
         # time materialize.write_stage's dedup_key would do this for free —
         # the in-memory result honors MERGE semantics the same way
-        all_nodes = all_nodes.dropDuplicates(["node_id"])
-
-        row_map = rowmap_parts[0]
-        for p in rowmap_parts[1:]:
-            row_map = row_map.unionByName(p)
-
+        nodes = fan_out([
+            F.when(p[i], F.struct(
+                n[i].alias("node_id"), F.lit(c).alias("class"),
+                F.col(f"_l{i}").alias("rdfs_label"), F.col(f"_u{i}").alias("uri"),
+                F.col(f"_m{i}").alias("props"),
+            ))
+            for i, c in enumerate(classes)
+        ]).dropDuplicates(["node_id"])
+        row_map = fan_out([
+            F.when(p[i], F.struct(
+                F.col("_row_id").alias("row_id"), F.lit(c).alias("class"),
+                n[i].alias("node_id"),
+            ))
+            for i, c in enumerate(classes)
+        ]).dropDuplicates()
         # FROM_DATA provenance: entity -> source row node id
-        from_data = row_map.select(
-            F.col("node_id").alias("src"),
-            F.lit(FROM_DATA).alias("rel_type"),
-            F.col("row_id").alias("dst"),
-        )
-        return RefactorResult(nodes=all_nodes, edges=from_data, row_map=row_map)
+        structs = [edge(p[i], n[i], FROM_DATA, F.col("_row_id")) for i in range(n_specs)]
+        if linked:
+            structs += [
+                edge(p[i] & p[j], n[i], t, n[j]) for t, i, j in self._rel_pairs(classes)
+            ]
+            # R4: instance -> Class-node edges (the class id is a constant)
+            structs += [
+                edge(p[i], n[i], IS_A, F.xxhash64(F.lit("Class"), F.lit(c)))
+                for i, c in enumerate(classes)
+            ]
+        return nodes, row_map, fan_out(structs).dropDuplicates()
+
+    def extract_class_entities(
+        self, df: DataFrame, specs: list[ExtractionSpec], domain: str
+    ) -> RefactorResult:
+        """R2: entity nodes per spec + FROM_DATA provenance edges, cut from
+        the same single-scan projection as ``refactor_all`` (see
+        ``_project`` for node identity and multi-property specs).
+
+        Nodes are deduped on their deterministic id, row_map and FROM_DATA
+        edges on the whole row."""
+        proj, classes = self._project(df, specs, domain)
+        nodes, row_map, edges = self._cut(proj, classes, len(specs), linked=False)
+        return RefactorResult(nodes=nodes, edges=edges, row_map=row_map, specs=specs)
 
     # -- R3 -------------------------------------------------------------------
 
@@ -376,6 +454,13 @@ class RefactorEngine:
     ) -> RefactorResult:
         """R9: plan -> extract -> link -> is_a (-> terms), one lazy DAG.
 
+        The batch is read once; nodes, row_map and edges (FROM_DATA,
+        typed relationships, IS_A) are each one explode over the shared
+        per-row projection (``_project``/``_cut``) followed by one dedup,
+        which also collapses byte-identical duplicate rows — no per-class
+        union, no ``row_id`` self-join, no separate row-dedup shuffle.
+        ``terms`` adds one broadcast join on ``nodes``.
+
         ``reify_rows`` is the reference's ``schema_CLASS`` mode
         (model_applier.py mode flag; exercised by
         tests_model_manager/test_create_model_from_data.py): each source
@@ -399,27 +484,10 @@ class RefactorEngine:
         specs = plan_extraction(self.model, table_class)
         if not specs:
             raise ValueError(f"no extraction specs for table class {table_class!r}")
-        res = self.extract_class_entities(df, specs, domain)
-        nodes, row_map = res.nodes, res.row_map
-        if reify_rows:
-            row_ids = row_map.select("row_id").distinct()
-            nodes = nodes.unionByName(row_ids.select(
-                F.col("row_id").alias("node_id"),
-                F.lit(table_class).alias("class"),
-                F.col("row_id").cast("string").alias("rdfs_label"),
-                F.lit(None).cast("string").alias("uri"),
-                F.lit(None).cast("map<string,string>").alias("props"),
-            ))
-            # row nodes join the co-membership map -> link_classes emits
-            # the table->entity edges in the same single self-join
-            row_map = row_map.unionByName(row_ids.select(
-                "row_id",
-                F.lit(table_class).alias("class"),
-                F.col("row_id").alias("node_id"),
-            ))
-        edges = res.edges.unionByName(self.link_classes(row_map)).unionByName(
-            self.is_a_edges(row_map)
+        proj, classes = self._project(
+            df, specs, domain, row_class=table_class if reify_rows else None
         )
+        nodes, row_map, edges = self._cut(proj, classes, len(specs), linked=True)
         if terms is not None:
             edges = edges.unionByName(self.link_to_terms(nodes, terms))
         return RefactorResult(nodes=nodes, edges=edges, row_map=row_map, specs=specs)

@@ -350,3 +350,28 @@ def test_pq_rerank_stage2_is_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "EvalPython" not in plan
+
+
+def test_refactor_all_scans_the_batch_once(spark, tmp_path):
+    """refactor_all cuts nodes and edges from ONE per-row projection: each
+    output's plan reads the source once and joins nothing on row_id (no
+    per-class union branches, no row_map self-join)."""
+    from tab2neo_spark.kg.refactor import RefactorEngine
+    from tab2neo_spark.model.metadata import MetadataModel
+
+    path = str(tmp_path / "batch")
+    spark.createDataFrame(
+        [("O1", "C1", "HIGH"), ("O2", "C1", None), ("O3", "C2", "LOW")],
+        "Order string, Customer string, Priority string",
+    ).write.parquet(path)
+    m = MetadataModel()
+    m.create_related_classes_from_list(
+        [["Row", c, c] for c in ("Order", "Customer", "Priority")])
+    m.create_relationship("Order", "Customer", "PLACED_BY")
+    m.create_relationship("Order", "Priority", "HAS_PRIORITY")
+    res = RefactorEngine(spark, m).refactor_all(
+        spark.read.parquet(path), "Row", reify_rows=True)
+    for df in (res.nodes, res.edges):
+        plan = _plan(df)
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "Join" not in plan, plan

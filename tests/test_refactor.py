@@ -298,3 +298,175 @@ def test_create_model_from_data_end_to_end(spark, tmp_path):
     got = out.drop("CREATE_MODEL_FROM_DATA")
     want = {tuple(str(v) for v in r) for r in src.collect()}
     assert {tuple(r) for r in got.select(*src.columns).collect()} == want
+
+
+# ---------------------------------------------------------------------------
+# Single-scan refactor_all vs the union / self-join formulation
+# ---------------------------------------------------------------------------
+
+
+def _union_refactor(eng, df, specs, table_class, terms=None, reify_rows=False):
+    """Reference: per-class union extraction + row_id self-join
+    (link_classes) + row_map IS_A — one union branch per spec, each
+    re-reading the batch. The equivalence oracle for refactor_all's
+    single-projection fan-out."""
+    from functools import reduce
+
+    from tab2neo_spark import schema as S
+    from tab2neo_spark.kg.refactor import FROM_DATA
+
+    rows = df.withColumn(
+        "_row_id", F.xxhash64(F.lit(table_class), *[F.col(c) for c in df.columns])
+    ).dropDuplicates(["_row_id"])
+    node_parts, rowmap_parts = [], []
+    for spec in specs:
+        vals = [F.col(src).cast("string") for src, _ in spec.columns]
+        base = rows.filter(reduce(lambda a, b: a | b, [v.isNotNull() for v in vals]))
+        key_parts = [F.coalesce(v, F.lit("\x00")) for v in vals]
+        salt = [F.col("_row_id")] if spec.mode == "create" else []
+        node_id = F.xxhash64(F.lit(spec.class_label), *salt, *key_parts)
+        is_label = [prop in ("rdfs_label", "rdfs:label") for _, prop in spec.columns]
+        labels = [v for v, lab in zip(vals, is_label) if lab]
+        props = [(prop, v) for (_, prop), v, lab in zip(spec.columns, vals, is_label) if not lab]
+        part = base.select(
+            node_id.alias("node_id"),
+            F.lit(spec.class_label).alias("class"),
+            (labels[0] if labels else F.lit(None).cast("string")).alias("rdfs_label"),
+            S.node_uri_col(F.lit(spec.class_label), *vals).alias("uri"),
+            (F.map_filter(F.create_map(*[x for p, v in props for x in (F.lit(p), v)]),
+                          lambda k, v: v.isNotNull())
+             if props else F.lit(None).cast("map<string,string>")).alias("props"),
+            F.col("_row_id"),
+        )
+        rowmap_parts.append(part.select(F.col("_row_id").alias("row_id"), "class", "node_id"))
+        node_parts.append(part.drop("_row_id"))
+    nodes = reduce(lambda a, b: a.unionByName(b), node_parts).dropDuplicates(["node_id"])
+    row_map = reduce(lambda a, b: a.unionByName(b), rowmap_parts)
+    from_data = row_map.select(F.col("node_id").alias("src"),
+                               F.lit(FROM_DATA).alias("rel_type"),
+                               F.col("row_id").alias("dst"))
+    if reify_rows:
+        row_ids = row_map.select("row_id").distinct()
+        nodes = nodes.unionByName(row_ids.select(
+            F.col("row_id").alias("node_id"), F.lit(table_class).alias("class"),
+            F.col("row_id").cast("string").alias("rdfs_label"),
+            F.lit(None).cast("string").alias("uri"),
+            F.lit(None).cast("map<string,string>").alias("props"),
+        ))
+        row_map = row_map.unionByName(row_ids.select(
+            "row_id", F.lit(table_class).alias("class"), F.col("row_id").alias("node_id")
+        ))
+    edges = from_data.unionByName(eng.link_classes(row_map)).unionByName(eng.is_a_edges(row_map))
+    if terms is not None:
+        edges = edges.unionByName(eng.link_to_terms(nodes, terms))
+    return nodes, edges, row_map
+
+
+def _bag(df) -> list:
+    """Multiset of rows, map columns made comparable."""
+    def norm(v):
+        return tuple(sorted(v.items())) if isinstance(v, dict) else v
+    return sorted((tuple(norm(v) for v in r) for r in df.collect()), key=repr)
+
+
+@pytest.fixture(scope="module")
+def mixed_df(spark):
+    rows = [
+        ("S1", "A", 30, "M", "blue", "Toyota"),
+        ("S1", "A", 30, "M", "blue", "Toyota"),  # byte-identical duplicate
+        ("S1", "B", 30, None, "blue", None),     # NULLs inside a multi-prop spec
+        ("S2", "A", 25, "F", None, None),        # multi-prop spec absent
+        (None, None, None, None, None, None),    # all-NULL row: no entity, no row node
+        (None, "C", None, "F", "red", "Honda"),
+    ]
+    return spark.createDataFrame(
+        rows, "Study string, Subject string, Age int, Sex string, "
+              "car_color string, car_make string")
+
+
+@pytest.fixture(scope="module")
+def mixed_model():
+    from tab2neo_spark.model.metadata import PropertyMapping
+
+    m = MetadataModel()
+    m.create_class("Age", create=True)  # create-mode: never merges
+    m.create_related_classes_from_list(
+        [["Record", "Study", "Study"], ["Record", "Subject", "Subject"],
+         ["Record", "Age", "Age"], ["Record", "Sex", "Sex"],
+         # a second relationship on the (Record, Subject) pair
+         ["Record", "Subject", "ENROLLS"]]
+    )
+    m.create_class("car")
+    m.property_mappings += [  # MAPS_TO_PROPERTY: a label pair + an open prop
+        PropertyMapping("Record", "car_make", "car", "rdfs_label"),
+        PropertyMapping("Record", "car_color", "car", "color"),
+    ]
+    m.create_relationship("Study", "Subject")
+    m.create_relationship("Study", "Subject", "RUNS")  # two rels, one class pair
+    m.create_relationship("Subject", "Subject", "SAME_ROW")  # from == to
+    m.create_relationship("Subject", "car", "DRIVES")
+    m.create_relationship("car", "Age")
+    m.create_relationship("Sex", "Record", "OF_ROW")  # entity -> row node
+    m.add_term(TermSpec("Sex", "CL.SEX", "M", "M"))
+    m.add_term(TermSpec("Sex", "CL.SEX", "F", "F"))
+    m.add_term(TermSpec("car", "CL.CAR", "T", "Toyota"))
+    return m
+
+
+@pytest.mark.parametrize("reify_rows", [False, True])
+@pytest.mark.parametrize("with_terms", [False, True])
+def test_refactor_all_equals_union_self_join_reference(
+        spark, mixed_df, mixed_model, reify_rows, with_terms):
+    """The single-projection fan-out yields exactly the union/self-join
+    formulation's nodes, edges and row_map (as multisets) over multi-prop
+    and create-mode specs, NULL and all-NULL rows, byte-identical
+    duplicates, reified rows, terms, a self-relationship and two
+    relationships on one class pair."""
+    eng = RefactorEngine(spark, mixed_model)
+    terms = mixed_model.terms_df(spark) if with_terms else None
+    res = eng.refactor_all(mixed_df, "Record", terms=terms, reify_rows=reify_rows)
+    ref_nodes, ref_edges, ref_row_map = _union_refactor(
+        eng, mixed_df, res.specs, "Record", terms=terms, reify_rows=reify_rows)
+    assert _bag(res.nodes) == _bag(ref_nodes)
+    assert _bag(res.edges) == _bag(ref_edges)
+    assert _bag(res.row_map) == _bag(ref_row_map)
+    kinds = {r[1] for r in _bag(res.edges)}
+    assert {"FROM_DATA", "IS_A", "Subject", "RUNS", "SAME_ROW", "DRIVES", "Age"} <= kinds
+    assert ("Term" in kinds) == with_terms
+    assert ({"ENROLLS", "OF_ROW"} <= kinds) == reify_rows
+    if reify_rows:  # one row node per distinct row with an entity
+        assert res.nodes.filter(F.col("class") == "Record").count() == 4
+
+
+def test_extract_class_entities_equals_union_reference(spark, mixed_df, mixed_model):
+    eng = RefactorEngine(spark, mixed_model)
+    specs = plan_extraction(mixed_model, "Record")
+    res = eng.extract_class_entities(mixed_df, specs, "Record")
+    ref_nodes, ref_edges, ref_row_map = _union_refactor(eng, mixed_df, specs, "Record")
+    assert _bag(res.nodes) == _bag(ref_nodes)
+    assert _bag(res.row_map) == _bag(ref_row_map)
+    assert _bag(res.edges) == _bag(ref_edges.filter(F.col("rel_type") == "FROM_DATA"))
+
+
+def test_two_relationships_to_one_class_extract_it_once(spark, tmp_path):
+    """Row->Customer of types Customer and BILLED_TO: ONE Customer spec,
+    so no duplicated row_map rows or FROM_DATA edges, and the keyed
+    upsert stores each (src, rel_type, dst) once."""
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    m = MetadataModel()
+    m.create_related_classes_from_list(
+        [["Row", "Customer", "Customer"], ["Row", "Customer", "BILLED_TO"],
+         ["Row", "Order", "Order"]])
+    m.create_relationship("Order", "Customer", "PLACED_BY")
+    specs = plan_extraction(m, "Row")
+    assert sorted(s.class_label for s in specs) == ["Customer", "Order"]
+
+    df = spark.createDataFrame([("C1", "O1"), ("C1", "O2")], "Customer string, Order string")
+    res = RefactorEngine(spark, m).refactor_all(df, "Row")
+    assert res.row_map.count() == res.row_map.distinct().count() == 4
+    store = GraphStore(spark, str(tmp_path / "g"))
+    out = store.write_stage(res.edges, "edges", "r1", "e",
+                            partition_by=["rel_type"], dedup_key=["src", "rel_type", "dst"])
+    stored = store.read("edges").select("src", "rel_type", "dst")
+    assert out["row_count"] == stored.count() == stored.distinct().count()
