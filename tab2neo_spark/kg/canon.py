@@ -11,8 +11,8 @@ rewritten to its component's canonical representative (the minimum id).
 Algorithm: iterative hash-min label propagation —
 ``comp(v) <- min(comp(v), min over neighbors comp(u))`` to fixpoint.
 Each round is one shuffle (groupBy on vertex); lineage is truncated with
-``localCheckpoint`` every ``checkpoint_every`` rounds so 50-round runs do
-not accumulate a 50-deep plan (the same reason the reference caps its
+an eager ``localCheckpoint`` every round so 50-round runs do not
+accumulate a 50-deep plan (the same reason the reference caps its
 SUBCLASS_OF traversal at depth 50, model_manager.py:25).  Rounds needed =
 graph diameter, which for alias/SAME_AS graphs is tiny (star-shaped
 synonym clusters); the loop is still written for the general case —
@@ -37,7 +37,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Return ``(id, component)`` — component = min member id (any orderable
     type; strings give the lexicographically-first surface form).
@@ -91,9 +90,7 @@ def connected_components(
         )
         # eager checkpoint every round: it doubles as the convergence action
         # (the change-count would otherwise re-run the whole lineage) and
-        # truncates the iterative plan. checkpoint_every applies to the
-        # reliable-checkpoint (HDFS) variant on a real cluster, where
-        # truncation is amortized instead.
+        # truncates the iterative plan.
         new_labels = new_labels.localCheckpoint(eager=True)
         changed = (
             new_labels.alias("n")
@@ -137,12 +134,13 @@ def components_adaptive(
     dst: str = "dst",
     driver_threshold: int = 100_000,
 ) -> DataFrame:
-    """``(id, component)`` with the same size-adaptive strategy as
-    :func:`canonical_map`, but type-preserving (works for long doc ids as
-    well as string surfaces): below ``driver_threshold`` edges the
-    union-find runs on the driver in ONE job — a multi-round iterative
-    shuffle's fixed overhead dominates at metadata scale — while larger
-    graphs go through the distributed hash-min + pointer-jumping loop."""
+    """``(id, component)``, type-preserving (long doc ids as well as
+    string surfaces). Distribution strategy follows data size, like the
+    reference's driver-side metadata planning (SURVEY §2.11): below
+    ``driver_threshold`` edges the union-find runs on the driver in ONE
+    job — a multi-round iterative shuffle's fixed overhead dominates at
+    metadata scale — while larger graphs go through the distributed
+    hash-min + pointer-jumping loop."""
     from pyspark.storagelevel import StorageLevel
 
     spark = edges.sparkSession
@@ -170,21 +168,9 @@ def canonical_map(
     same_as: DataFrame, a: str = "a", b: str = "b", driver_threshold: int = 100_000
 ) -> DataFrame:
     """``(surface, canonical)`` for every surface in the SAME_AS graph,
-    including identity rows for the representatives themselves.
-
-    Distribution strategy follows data size, like the reference's
-    driver-side metadata planning (SURVEY §2.11): alias graphs at
-    metadata scale (< ``driver_threshold`` edges) are collected and
-    union-found on the driver — one job instead of a multi-round
-    iterative shuffle whose fixed overhead would dominate; larger graphs
-    go through the distributed hash-min loop."""
-    spark = same_as.sparkSession
-    n = same_as.limit(driver_threshold + 1).count()
-    if n <= driver_threshold:
-        pairs = [(r[a], r[b]) for r in same_as.collect()]
-        mapping = sorted(_union_find_driver(pairs).items())
-        return spark.createDataFrame(mapping, "surface string, canonical string")
-    comp = connected_components(same_as, src=a, dst=b)
+    including identity rows for the representatives themselves: the
+    :func:`components_adaptive` map under the names the readback joins on."""
+    comp = components_adaptive(same_as, src=a, dst=b, driver_threshold=driver_threshold)
     return comp.select(F.col("id").alias("surface"), F.col("component").alias("canonical"))
 
 

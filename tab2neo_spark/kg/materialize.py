@@ -10,10 +10,10 @@ Design:
 
 - **Tables**: ``nodes`` partitioned by ``class``, ``edges`` by
   ``rel_type``, ``triples`` by ``pred`` — partition pruning serves the
-  readback layer's class/rel filters directly. Parquet in this sandbox;
-  on a real deployment the same writers target Iceberg (MERGE INTO,
-  snapshot rollback) — the jars aren't in this image, so the Iceberg
-  branch is gated behind an import/config try (see ``_iceberg_available``).
+  readback layer's class/rel filters directly (``_LAYOUT`` states each
+  table's partition columns and dedup key once). Plain parquet only; an
+  Iceberg deployment would replace the anti-join with MERGE INTO and the
+  rollback rewrite with a snapshot rollback.
 - **Idempotency**: all ids are deterministic content hashes, so re-writing
   the same input produces byte-identical rows; dedup-on-write
   (anti-join against the existing table) replaces transactional MERGE.
@@ -21,27 +21,31 @@ Design:
   per-partition row histogram; a stage found 'done' in the checkpoint
   table is skipped on resume — re-running a crashed job re-does only the
   missing stages.
-- **Rollback**: every row carries ``run_id``; rollback = partition-pruned
-  delete of that run's rows (Iceberg: snapshot rollback).
+- **Rollback/compaction**: every row carries ``run_id`` (and ``_action``
+  when written by :func:`write_method_result`); parquet has no row-level
+  delete, so rollback and compaction both go through ONE in-place rewrite
+  (:meth:`GraphStore._rewrite`).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        return "org.apache.iceberg.spark.SparkCatalog" in (
-            spark.conf.get("spark.sql.catalog.spark_catalog", "")
-        )
-    except Exception:
-        return False
+# table -> (partition columns, dedup key). Every dedup key determines its
+# partition columns, which _existing_for_dedup's pruning relies on.
+_LAYOUT = {
+    "nodes": (["class"], ["node_id"]),
+    "edges": (["rel_type"], ["src", "rel_type", "dst"]),
+    "triples": (["pred"], ["subj", "pred", "obj"]),
+    "labels": (["extra_label"], ["node_id", "extra_label"]),
+}
 
 
 class GraphStore:
@@ -111,7 +115,6 @@ class GraphStore:
         stage: str,
         partition_by: list[str] | None = None,
         dedup_key: list[str] | None = None,
-        mode: str = "append",
     ) -> dict:
         """Write one stage's output with lineage; skip if already done.
 
@@ -147,7 +150,7 @@ class GraphStore:
         obs = Observation(f"{run_id}__{stage}")
         out = out.observe(obs, F.count(F.lit(1)).alias("row_count"))
 
-        writer = out.write.mode(mode)
+        writer = out.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
@@ -314,6 +317,52 @@ class GraphStore:
                 return json.load(f).get("partition_by", [])
         return []
 
+    # -- in-place rewrite (rollback, compaction) -------------------------------
+
+    def _rewrite(
+        self, table: str, transform, tag: str, expect_rows: int | None = None
+    ) -> bool:
+        """The one in-place rewrite of a table: ``transform`` the current
+        rows, write them to ``<table>__<tag>_tmp`` with the table's
+        ``__meta.json`` partitioning, then swap the temp dir in. Returns
+        False, touching nothing, when ``transform`` returns None.
+
+        The read merges every file's schema: ``_action`` exists only on
+        rows written via :func:`write_method_result`, and a read that
+        samples one footer would drop it from every kept row. Keeping the
+        partition layout keeps partition pruning alive for later reads.
+        ``expect_rows`` checks the rewrite's footer row count before the
+        destructive swap (r5 ADVICE): a row-losing rewrite, or an append
+        landing between the read and the swap (every mutation assumes a
+        single writer), aborts with the original directory intact."""
+        path = self.path(table)
+        out = transform(self.spark.read.option("mergeSchema", "true").parquet(path))
+        if out is None:
+            return False
+        tmp = f"{path}__{tag}_tmp"
+        writer = out.write.mode("overwrite")
+        parts = self.table_partitioning(table)
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(tmp)
+        if expect_rows is not None:
+            rows_tmp = sum(self._footer_histogram(self._parquet_files(tmp)).values())
+            if rows_tmp != expect_rows:
+                shutil.rmtree(tmp)
+                raise RuntimeError(
+                    f"{tag}({table!r}): rewrite holds {rows_tmp} rows but the "
+                    f"source held {expect_rows} — aborting before the swap "
+                    "(concurrent append, or a row-dropping read?); original "
+                    "directory left untouched"
+                )
+        self._swap_dirs(tmp, path)
+        return True
+
+    @staticmethod
+    def _swap_dirs(src: str, dst: str) -> None:
+        shutil.rmtree(dst)
+        os.replace(src, dst)
+
     # -- rollback ----------------------------------------------------------------
 
     def rollback_run(self, run_id: str, tables: list[str]) -> None:
@@ -321,30 +370,7 @@ class GraphStore:
         mark its checkpoints rolled back. Parquet has no row-level delete,
         so this rewrites the table without the run's rows — Iceberg/Delta
         deployments do a metadata-only DELETE/snapshot rollback instead."""
-        for table in tables:
-            path = self.path(table)
-            if not os.path.isdir(path):
-                continue
-            kept = self.spark.read.parquet(path).filter(F.col("run_id") != run_id)
-            tmp = path + "__rollback_tmp"
-            writer = kept.write.mode("overwrite")
-            # preserve the table's partition layout — a rewrite that drops
-            # partitioning would silently kill partition pruning for every
-            # subsequent readback
-            parts = self.table_partitioning(table)
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(tmp)
-            self._swap_dirs(tmp, path)
-        # only the checkpoints of the ROLLED-BACK tables flip status: a
-        # partial rollback (subset of tables) must keep the other tables'
-        # commits visible — time-travel reads (read(as_of_run=...)) derive
-        # visibility from per-table checkpoint status
-        rolled = set(tables)
-        for rec in self.checkpoints(run_id):
-            if rec.get("table") in rolled:
-                rec["status"] = "rolled_back"
-                self.write_checkpoint(run_id, rec["stage"], rec)
+        self._rollback(run_id, tables)
 
     def rollback_action(self, run_id: str, action_idx: int, tables: list[str]) -> None:
         """Per-action rollback (the reference's Changes-node inverse,
@@ -352,37 +378,36 @@ class GraphStore:
         action's writes while keeping the rest of the run. Rows written via
         :func:`write_method_result` carry ``_action``; the rewrite filters
         on (run_id, _action) — Iceberg/Delta deployments do a row-level
-        DELETE instead."""
-        for table in tables:
-            path = self.path(table)
-            if not os.path.isdir(path):
-                continue
-            # mergeSchema: _action exists only on rows written via
-            # write_method_result; rows from other writers (e.g.
-            # materialize_kg on the same table) lack it. Without the merged
-            # read, a sampled footer missing _action would silently no-op
-            # the rollback; without the null-safe coalesce, those rows'
-            # NULL _action would make the keep-predicate NULL and filter()
-            # would DROP unrelated same-run rows.
-            df = self.spark.read.option("mergeSchema", "true").parquet(path)
-            if "_action" not in df.columns:
-                continue  # table has no action-written rows at all
-            kept = df.filter(
-                ~(
-                    (F.col("run_id") == run_id)
-                    & F.coalesce(F.col("_action") == action_idx, F.lit(False))
-                )
-            )
-            tmp = path + "__rollback_tmp"
-            writer = kept.write.mode("overwrite")
-            parts = self.table_partitioning(table)
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(tmp)
-            self._swap_dirs(tmp, path)
-        marker = f"__a{action_idx}_"
+        DELETE instead. Tables without an ``_action`` column are left
+        alone."""
+        self._rollback(run_id, tables, action_idx)
+
+    def _rollback(
+        self, run_id: str, tables: list[str], action_idx: int | None = None
+    ) -> None:
+        # NULL-safe drop predicate: a NULL run_id or _action (rows from
+        # writers other than write_method_result) must never turn the
+        # keep-predicate NULL, which filter() would treat as a drop
+        drop = F.col("run_id").eqNullSafe(F.lit(run_id))
+        if action_idx is not None:
+            drop = drop & F.coalesce(F.col("_action") == action_idx, F.lit(False))
+
+        def keep(df: DataFrame) -> DataFrame | None:
+            if action_idx is not None and "_action" not in df.columns:
+                return None  # no action-written rows in this table
+            return df.filter(~drop)
+
+        rewritten = {
+            t for t in tables
+            if os.path.isdir(self.path(t)) and self._rewrite(t, keep, "rollback")
+        }
+        # only the checkpoints of the REWRITTEN tables flip status: a
+        # partial rollback must keep the other tables' commits visible —
+        # time-travel reads (read(as_of_run=...)) derive visibility from
+        # per-table checkpoint status
+        marker = "" if action_idx is None else f"__a{action_idx}_"
         for rec in self.checkpoints(run_id):
-            if marker in rec["stage"]:
+            if rec.get("table") in rewritten and marker in rec["stage"]:
                 rec["status"] = "rolled_back"
                 self.write_checkpoint(run_id, rec["stage"], rec)
 
@@ -418,36 +443,14 @@ class GraphStore:
         before = self._parquet_files(path)
         bytes_before = sum(os.path.getsize(f) for f in before)
         rows_before = sum(self._footer_histogram(before).values())
-
-        df = self.spark.read.option("mergeSchema", "true").parquet(path)
         parts = self.table_partitioning(table)
-        if parts:
-            out = df.repartition(*[F.col(p) for p in parts])
-        else:
-            n = max(1, -(-bytes_before // max(target_file_bytes, 1)))
-            out = df.repartition(int(n))
-        tmp = path + "__compact_tmp"
-        writer = out.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(tmp)
-        # VERIFY the rewrite before the destructive swap (r5 ADVICE): a
-        # row-losing rewrite — or a concurrent append landing between the
-        # snapshot read and the swap (compaction assumes a single writer,
-        # like every GraphStore mutation) — must abort with the original
-        # directory intact, not be recorded as an unchecked number.
-        rows_tmp = sum(self._footer_histogram(self._parquet_files(tmp)).values())
-        if rows_tmp != rows_before:
-            import shutil
 
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"compact({table!r}): rewrite holds {rows_tmp} rows but the "
-                f"source held {rows_before} — aborting before the swap "
-                "(concurrent append, or a row-dropping read?); original "
-                "directory left untouched"
-            )
-        self._swap_dirs(tmp, path)
+        def repartition(df: DataFrame) -> DataFrame:
+            if parts:
+                return df.repartition(*[F.col(p) for p in parts])
+            return df.repartition(max(1, -(-bytes_before // max(target_file_bytes, 1))))
+
+        self._rewrite(table, repartition, "compact", expect_rows=rows_before)
 
         after = self._parquet_files(path)
         payload = {
@@ -469,13 +472,6 @@ class GraphStore:
         self.write_checkpoint("__compact__", stage, payload)
         return payload
 
-    @staticmethod
-    def _swap_dirs(src: str, dst: str) -> None:
-        import shutil
-
-        shutil.rmtree(dst)
-        os.replace(src, dst)
-
 
 def write_method_result(
     store: GraphStore,
@@ -483,35 +479,25 @@ def write_method_result(
     run_id: str,
     method_name: str = "method",
 ) -> dict:
-    """Persist a MethodResult's new_nodes/new_edges batches with per-ACTION
-    provenance: every row carries ``_action`` (the producing action's index
-    from ``res.node_actions``/``res.edge_actions``) so
-    :meth:`GraphStore.rollback_action` can revert a single action — the
-    reference's ``(action)-[:APPLIED]->(Changes)`` discipline without
-    driver-side id lists."""
+    """Persist a MethodResult's new_nodes/new_edges/new_labels batches with
+    per-ACTION provenance: every row carries ``_action`` (the producing
+    action's index from ``res.node_actions``/``edge_actions``/
+    ``label_actions``) so :meth:`GraphStore.rollback_action` can revert a
+    single action — the reference's ``(action)-[:APPLIED]->(Changes)``
+    discipline without driver-side id lists."""
     results: dict = {}
-    for j, (df, idx) in enumerate(zip(res.new_nodes, res.node_actions)):
-        stage = f"{method_name}__a{idx}_nodes{j}"
-        results[stage] = store.write_stage(
-            df.withColumn("_action", F.lit(idx)),
-            "nodes", run_id, stage,
-            partition_by=["class"], dedup_key=["node_id"],
-        )
-    for j, (df, idx) in enumerate(zip(res.new_edges, res.edge_actions)):
-        stage = f"{method_name}__a{idx}_edges{j}"
-        results[stage] = store.write_stage(
-            df.withColumn("_action", F.lit(idx)),
-            "edges", run_id, stage,
-            partition_by=["rel_type"], dedup_key=["src", "rel_type", "dst"],
-        )
-    for j, (df, idx) in enumerate(zip(getattr(res, "new_labels", []),
-                                      getattr(res, "label_actions", []))):
-        stage = f"{method_name}__a{idx}_labels{j}"
-        results[stage] = store.write_stage(
-            df.withColumn("_action", F.lit(idx)),
-            "labels", run_id, stage,
-            partition_by=["extra_label"], dedup_key=["node_id", "extra_label"],
-        )
+    for table, batches, actions in (
+        ("nodes", res.new_nodes, res.node_actions),
+        ("edges", res.new_edges, res.edge_actions),
+        ("labels", res.new_labels, res.label_actions),
+    ):
+        parts, key = _LAYOUT[table]
+        for j, (df, idx) in enumerate(zip(batches, actions)):
+            stage = f"{method_name}__a{idx}_{table}{j}"
+            results[stage] = store.write_stage(
+                df.withColumn("_action", F.lit(idx)), table, run_id, stage,
+                partition_by=parts, dedup_key=key,
+            )
     return results
 
 
@@ -523,16 +509,10 @@ def materialize_kg(
     """Write a KGResult's nodes/edges/triples with lineage; resumable —
     re-invoking with the same run_id skips completed stages."""
     results = {}
-    results["nodes"] = store.write_stage(
-        kg.nodes, "nodes", run_id, "nodes",
-        partition_by=["class"], dedup_key=["node_id"],
-    )
-    results["edges"] = store.write_stage(
-        kg.edges, "edges", run_id, "edges",
-        partition_by=["rel_type"], dedup_key=["src", "rel_type", "dst"],
-    )
-    results["triples"] = store.write_stage(
-        kg.triples, "triples", run_id, "triples",
-        partition_by=["pred"], dedup_key=["subj", "pred", "obj"],
-    )
+    for table in ("nodes", "edges", "triples"):
+        parts, key = _LAYOUT[table]
+        results[table] = store.write_stage(
+            getattr(kg, table), table, run_id, table,
+            partition_by=parts, dedup_key=key,
+        )
     return results

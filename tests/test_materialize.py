@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tab2neo_spark.datagen import pages_from_documents
@@ -199,3 +200,268 @@ def test_bucketed_layout_zero_exchange_join(spark, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
         spark.sql(f"DROP TABLE IF EXISTS {ta}")
         spark.sql(f"DROP TABLE IF EXISTS {tb}")
+
+
+def test_rollback_action_keeps_rows_without_action_column(spark, tmp_path):
+    """Same run_id, same table, two writers: one batch has no _action
+    column. rollback_action(run, 2) must delete ONLY (run, _action=2) rows
+    — the NULL-_action rows survive (previously the NULL predicate dropped
+    them, or a non-merged schema silently no-op'ed the rollback)."""
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+    plain = spark.createDataFrame([(1, "Subject", "s1"), (2, "Subject", "s2")], schema)
+    acted = spark.createDataFrame([(3, "Sex", "M"), (4, "Sex", "F")], schema)
+
+    # writer A: no _action column (the materialize_kg path)
+    store.write_stage(plain, "nodes", "r1", "plain",
+                      partition_by=["class"], dedup_key=["node_id"])
+    # writer B: action-provenance rows (the write_method_result path)
+    store.write_stage(acted.withColumn("_action", F.lit(2)), "nodes", "r1",
+                      "m__a2_nodes0", partition_by=["class"],
+                      dedup_key=["node_id"])
+
+    store.rollback_action("r1", 2, ["nodes"])
+    kept = store.read("nodes")
+    assert {r["rdfs_label"] for r in kept.collect()} == {"s1", "s2"}
+
+
+def test_rollback_action_absent_column_noops(spark, tmp_path):
+    """A table with NO action-written rows at all: rollback_action is a
+    no-op (and must not crash on the absent column)."""
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    df = spark.createDataFrame([(1, "A", "x")],
+                               "node_id long, class string, rdfs_label string")
+    store.write_stage(df, "nodes", "r1", "s0", partition_by=["class"])
+    store.rollback_action("r1", 0, ["nodes"])
+    assert store.read("nodes").count() == 1
+
+
+def test_upsert_anti_join_scan_is_partition_pruned(spark, tmp_path):
+    """Incremental keyed upserts must not re-read the whole target table:
+    when the batch touches a subset of partitions, the existing-keys
+    anti-join scan carries PartitionFilters for exactly those partitions,
+    and dedup semantics inside them are unchanged."""
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+    first = spark.createDataFrame(
+        [(1, "A", "a1"), (2, "A", "a2"), (3, "B", "b1")], schema
+    )
+    store.write_stage(first, "nodes", "r1", "s1",
+                      partition_by=["class"], dedup_key=["node_id"])
+
+    # batch touching ONLY class A: one dup (node 1) + one new row
+    batch = spark.createDataFrame([(1, "A", "a1"), (4, "A", "a4")], schema)
+    existing, n = store._existing_for_dedup(
+        store.path("nodes"), batch, ["class"]
+    )
+    assert n == 1
+    plan = existing._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan and "class" in plan.split("PartitionFilters")[1][:120]
+    # the pruned read sees only class A rows
+    assert {r["class"] for r in existing.collect()} == {"A"}
+
+    payload = store.write_stage(batch, "nodes", "r2", "s2",
+                                partition_by=["class"], dedup_key=["node_id"])
+    assert payload["dedup_scan_partitions"] == 1
+    assert payload["row_count"] == 1  # dup dropped, new row written
+    got = {(r["node_id"], r["class"]) for r in store.read("nodes").collect()}
+    assert got == {(1, "A"), (2, "A"), (3, "B"), (4, "A")}
+
+
+def test_graphstore_time_travel_read(spark, tmp_path):
+    """read(table, as_of_run=...) reconstructs the table as it stood
+    after a given run's commit (lineage-driven visibility); a rolled-back
+    run disappears from every snapshot; unknown runs raise."""
+    import pytest as _pytest
+
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    for i, run in enumerate(["r1", "r2", "r3"]):
+        df = spark.createDataFrame(
+            [(run, j) for j in range(3 + i)], "tag string, v int"
+        )
+        store.write_stage(df, "nodes", run, f"stage_{run}")
+
+    def tags(df):
+        return sorted({r["tag"] for r in df.collect()})
+
+    assert tags(store.read("nodes")) == ["r1", "r2", "r3"]
+    assert tags(store.read("nodes", as_of_run="r1")) == ["r1"]
+    assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
+    assert store.read("nodes", as_of_run="r2").count() == 7  # 3 + 4 rows
+
+    store.rollback_run("r3", ["nodes"])
+    assert tags(store.read("nodes")) == ["r1", "r2"]
+    with _pytest.raises(ValueError, match="no surviving commit"):
+        store.read("nodes", as_of_run="r3")
+    assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
+
+
+def test_graphstore_compaction(spark, tmp_path):
+    """Compaction (VERDICT r4 #10): many small append runs collapse to
+    ~one file per partition value; read-back content is hash-identical,
+    the partition layout contract survives, time-travel visibility is
+    unaffected, and the lineage checkpoint records the file counts."""
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    for i in range(6):
+        df = spark.createDataFrame(
+            [(f"r{i}", j, "A" if j % 2 else "B") for j in range(10)],
+            "tag string, v int, cls string",
+        )
+        store.write_stage(df, "nodes", f"r{i}", f"s{i}", partition_by=["cls"])
+
+    def snapshot(df):
+        return sorted(map(tuple, df.select("tag", "v", "cls", "run_id").collect()))
+
+    before_rows = snapshot(store.read("nodes"))
+    n_before = len(store._parquet_files(store.path("nodes")))
+    assert n_before >= 12  # 6 runs x 2 partition values, at least
+
+    payload = store.compact("nodes")
+    n_after = len(store._parquet_files(store.path("nodes")))
+    assert n_after < n_before and n_after <= 4
+    assert payload["files_before"] == n_before
+    assert payload["files_after"] == n_after
+    assert payload["row_count"] == payload["rows_after"] == 60
+
+    # content identical, partition layout contract intact
+    assert snapshot(store.read("nodes")) == before_rows
+    assert store.table_partitioning("nodes") == ["cls"]
+    import os as _os
+
+    subdirs = {
+        d for d in _os.listdir(store.path("nodes")) if d.startswith("cls=")
+    }
+    assert subdirs == {"cls=A", "cls=B"}
+
+    # time travel still reads through checkpoint lineage (compaction is
+    # not a data commit: as_of '__compact__' must NOT become addressable)
+    assert {r[3] for r in snapshot(store.read("nodes", as_of_run="r2"))} == {
+        "r0", "r1", "r2"
+    }
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError, match="no surviving commit"):
+        store.read("nodes", as_of_run="__compact__")
+
+    # lineage artifact recorded
+    recs = [r for r in store.checkpoints("__compact__") if r["op"] == "compact"]
+    assert len(recs) == 1 and recs[0]["table_compacted"] == "nodes"
+
+
+def test_compact_refuses_bucketed_layout(spark, tmp_path):
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    df = spark.createDataFrame([(1, "a")], "k int, v string")
+    store.write_bucketed(df, "edges", ["k"], n_buckets=2)
+    with pytest.raises(ValueError, match="bucketed layout"):
+        store.compact("edges__bucketed")
+
+
+def test_compact_aborts_on_row_loss_and_keeps_original(spark, tmp_path, monkeypatch):
+    from tab2neo_spark.kg import materialize as M
+
+    store = M.GraphStore(spark, str(tmp_path / "g"))
+    df = spark.range(100).select(
+        F.col("id").alias("node_id"), F.lit("r1").alias("run_id")
+    )
+    df.write.parquet(store.path("t"))
+
+    real = M.GraphStore._footer_histogram
+
+    def sabotaged(self, files):
+        h = real(self, files)
+        if any("__compact_tmp" in f for f in files):
+            # simulate a row-losing rewrite (or a concurrent append
+            # having landed in the source after the snapshot read)
+            k = next(iter(h))
+            h[k] = h[k] - 1
+        return h
+
+    monkeypatch.setattr(M.GraphStore, "_footer_histogram", sabotaged)
+    with pytest.raises(RuntimeError, match="aborting before the swap"):
+        store.compact("t")
+    monkeypatch.setattr(M.GraphStore, "_footer_histogram", real)
+    # original directory untouched, readable, full row count
+    assert spark.read.parquet(store.path("t")).count() == 100
+
+
+def test_compact_still_works_when_counts_match(spark, tmp_path):
+    from tab2neo_spark.kg.materialize import GraphStore
+
+    store = GraphStore(spark, str(tmp_path / "g2"))
+    spark.range(50).selectExpr("id as node_id", "'r1' as run_id").repartition(
+        8
+    ).write.parquet(store.path("t"))
+    out = store.compact("t")
+    assert out["row_count"] == 50 and out["rows_after"] == 50
+    assert spark.read.parquet(store.path("t")).count() == 50
+
+
+def test_rollback_run_keeps_action_provenance(spark, tmp_path):
+    """Rolling back an UNRELATED run must keep ``_action`` on every kept
+    row: a rewrite that read one footer without it dropped the column, and
+    a later rollback_action then silently kept the action's rows."""
+    from tab2neo_spark.kg.materialize import GraphStore, write_method_result
+    from tab2neo_spark.pipeline.runner import DerivationMethod
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+    plain = [(i, c, f"{c}{i}") for i, c in enumerate(["Arm", "Dose", "Epoch", "Visit"])]
+    store.write_stage(spark.createDataFrame(plain, schema), "nodes", "r0", "plain",
+                      partition_by=["class"], dedup_key=["node_id"])
+    res = DerivationMethod(spark, {
+        "name": "m",
+        "actions": [
+            {"type": "get_data"},
+            {"type": "assign_class", "class": "Subject", "value_column": "Subject"},
+        ],
+    }, source_df=spark.createDataFrame([("S1",), ("S2",)], "Subject string")).apply()
+    write_method_result(store, res, "r1", "m")
+    more = [(10 + i, c, f"{c}x") for i, c in enumerate(["Arm", "Site"])]
+    store.write_stage(spark.createDataFrame(more, schema), "nodes", "r2", "plain",
+                      partition_by=["class"], dedup_key=["node_id"])
+
+    store.rollback_run("r2", ["nodes"])
+    store.rollback_action("r1", 1, ["nodes"])
+    nodes = store.read("nodes")
+    assert nodes.filter(F.col("run_id") == "r1").count() == 0
+    assert {r["run_id"] for r in nodes.collect()} == {"r0"}
+
+
+def test_rollback_action_flips_only_rewritten_tables_checkpoints(spark, tmp_path):
+    """A literal-target link writes a node AND edges under one action;
+    rolling that action back on ``edges`` alone must leave its ``nodes``
+    stage (whose row is still stored) marked done."""
+    from tab2neo_spark.kg.materialize import GraphStore, write_method_result
+    from tab2neo_spark.pipeline.runner import DerivationMethod
+
+    res = DerivationMethod(spark, {
+        "name": "m",
+        "actions": [
+            {"type": "get_data"},
+            {"type": "assign_class", "class": "Subject", "value_column": "Subject"},
+            {"type": "link", "relationship_type": "IN_STUDY",
+             "from_id": "_id_Subject", "to_class": "Study", "to_value": "STUDY1"},
+        ],
+    }, source_df=spark.createDataFrame([("S1",), ("S2",)], "Subject string")).apply()
+    assert res.node_actions == [1, 2] and res.edge_actions == [2]
+    store = GraphStore(spark, str(tmp_path / "g"))
+    write_method_result(store, res, "r1", "m")
+
+    store.rollback_action("r1", 2, ["edges"])
+    assert store.read("nodes").filter(F.col("class") == "Study").count() == 1
+    by_stage = {c["stage"]: c["status"] for c in store.checkpoints("r1")}
+    assert by_stage["m__a2_edges0"] == "rolled_back"
+    assert by_stage["m__a2_nodes1"] == "done"
+    assert store.stage_done("r1", "m__a2_nodes1")

@@ -1,12 +1,11 @@
-"""Round-3 regression tests for the ADVICE findings:
+"""Round-3 regression tests for the ADVICE findings (the rollback_action
+null-safety tests live in test_materialize):
 
-1. rollback_action must be null-safe when a table mixes action-written rows
-   (carrying ``_action``) with rows from other writers (no ``_action``).
-2. labels_to_pack map form must not crash on a 1:N key->value group
+1. labels_to_pack map form must not crash on a 1:N key->value group
    (Spark's default mapKeyDedupPolicy=EXCEPTION).
-3. embedding_near_dup_pairs must reject num_bits > vector dimension
+2. embedding_near_dup_pairs must reject num_bits > vector dimension
    (silent O(n^2) degeneration otherwise).
-4. bare {"incl_null": bool} where_map conditions compile to null checks
+3. bare {"incl_null": bool} where_map conditions compile to null checks
    (reference tests_query_builders/test_qb2.py:336).
 """
 
@@ -14,44 +13,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_rollback_action_keeps_rows_without_action_column(spark, tmp_path):
-    """Same run_id, same table, two writers: one batch has no _action
-    column. rollback_action(run, 2) must delete ONLY (run, _action=2) rows
-    — the NULL-_action rows survive (previously the NULL predicate dropped
-    them, or a non-merged schema silently no-op'ed the rollback)."""
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    schema = "node_id long, class string, rdfs_label string"
-    plain = spark.createDataFrame([(1, "Subject", "s1"), (2, "Subject", "s2")], schema)
-    acted = spark.createDataFrame([(3, "Sex", "M"), (4, "Sex", "F")], schema)
-
-    # writer A: no _action column (the materialize_kg path)
-    store.write_stage(plain, "nodes", "r1", "plain",
-                      partition_by=["class"], dedup_key=["node_id"])
-    # writer B: action-provenance rows (the write_method_result path)
-    store.write_stage(acted.withColumn("_action", F.lit(2)), "nodes", "r1",
-                      "m__a2_nodes0", partition_by=["class"],
-                      dedup_key=["node_id"])
-
-    store.rollback_action("r1", 2, ["nodes"])
-    kept = store.read("nodes")
-    assert {r["rdfs_label"] for r in kept.collect()} == {"s1", "s2"}
-
-
-def test_rollback_action_absent_column_noops(spark, tmp_path):
-    """A table with NO action-written rows at all: rollback_action is a
-    no-op (and must not crash on the absent column)."""
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    df = spark.createDataFrame([(1, "A", "x")],
-                               "node_id long, class string, rdfs_label string")
-    store.write_stage(df, "nodes", "r1", "s0", partition_by=["class"])
-    store.rollback_action("r1", 0, ["nodes"])
-    assert store.read("nodes").count() == 1
 
 
 def test_map_pack_duplicate_key_keeps_max_value(spark):
@@ -116,40 +77,6 @@ def test_bare_incl_null_condition(spark):
     assert [r["id"] for r in only_null.collect()] == [2]
     not_null = apply_where_map(df, {"v": {"incl_null": False}})
     assert sorted(r["id"] for r in not_null.collect()) == [1, 3]
-
-
-def test_upsert_anti_join_scan_is_partition_pruned(spark, tmp_path):
-    """Incremental keyed upserts must not re-read the whole target table:
-    when the batch touches a subset of partitions, the existing-keys
-    anti-join scan carries PartitionFilters for exactly those partitions,
-    and dedup semantics inside them are unchanged."""
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    schema = "node_id long, class string, rdfs_label string"
-    first = spark.createDataFrame(
-        [(1, "A", "a1"), (2, "A", "a2"), (3, "B", "b1")], schema
-    )
-    store.write_stage(first, "nodes", "r1", "s1",
-                      partition_by=["class"], dedup_key=["node_id"])
-
-    # batch touching ONLY class A: one dup (node 1) + one new row
-    batch = spark.createDataFrame([(1, "A", "a1"), (4, "A", "a4")], schema)
-    existing, n = store._existing_for_dedup(
-        store.path("nodes"), batch, ["class"]
-    )
-    assert n == 1
-    plan = existing._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "class" in plan.split("PartitionFilters")[1][:120]
-    # the pruned read sees only class A rows
-    assert {r["class"] for r in existing.collect()} == {"A"}
-
-    payload = store.write_stage(batch, "nodes", "r2", "s2",
-                                partition_by=["class"], dedup_key=["node_id"])
-    assert payload["dedup_scan_partitions"] == 1
-    assert payload["row_count"] == 1  # dup dropped, new row written
-    got = {(r["node_id"], r["class"]) for r in store.read("nodes").collect()}
-    assert got == {(1, "A"), (2, "A"), (3, "B"), (4, "A")}
 
 
 @pytest.mark.parametrize("tokens,budget,num_bands", [

@@ -318,36 +318,6 @@ def test_domain_mixing_weights(spark):
     assert tempered["small"] > nat["small"]["weight"]  # upweighted
 
 
-def test_graphstore_time_travel_read(spark, tmp_path):
-    """read(table, as_of_run=...) reconstructs the table as it stood
-    after a given run's commit (lineage-driven visibility); a rolled-back
-    run disappears from every snapshot; unknown runs raise."""
-    import pytest as _pytest
-
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    for i, run in enumerate(["r1", "r2", "r3"]):
-        df = spark.createDataFrame(
-            [(run, j) for j in range(3 + i)], "tag string, v int"
-        )
-        store.write_stage(df, "nodes", run, f"stage_{run}")
-
-    def tags(df):
-        return sorted({r["tag"] for r in df.collect()})
-
-    assert tags(store.read("nodes")) == ["r1", "r2", "r3"]
-    assert tags(store.read("nodes", as_of_run="r1")) == ["r1"]
-    assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
-    assert store.read("nodes", as_of_run="r2").count() == 7  # 3 + 4 rows
-
-    store.rollback_run("r3", ["nodes"])
-    assert tags(store.read("nodes")) == ["r1", "r2"]
-    with _pytest.raises(ValueError, match="no surviving commit"):
-        store.read("nodes", as_of_run="r3")
-    assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
-
-
 def test_rdata_altrep_and_int64():
     """Reader handles R >= 3.5 ALTREP records (compact integer sequences —
     what real R writes for df$id <- 1:n — and wrap_* vectors); writer

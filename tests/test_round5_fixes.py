@@ -107,60 +107,6 @@ def test_simhash_block_widths():
     assert sum(simhash_block_widths(64, 5)) == 64
 
 
-def test_graphstore_compaction(spark, tmp_path):
-    """Compaction (VERDICT r4 #10): many small append runs collapse to
-    ~one file per partition value; read-back content is hash-identical,
-    the partition layout contract survives, time-travel visibility is
-    unaffected, and the lineage checkpoint records the file counts."""
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    for i in range(6):
-        df = spark.createDataFrame(
-            [(f"r{i}", j, "A" if j % 2 else "B") for j in range(10)],
-            "tag string, v int, cls string",
-        )
-        store.write_stage(df, "nodes", f"r{i}", f"s{i}", partition_by=["cls"])
-
-    def snapshot(df):
-        return sorted(map(tuple, df.select("tag", "v", "cls", "run_id").collect()))
-
-    before_rows = snapshot(store.read("nodes"))
-    n_before = len(store._parquet_files(store.path("nodes")))
-    assert n_before >= 12  # 6 runs x 2 partition values, at least
-
-    payload = store.compact("nodes")
-    n_after = len(store._parquet_files(store.path("nodes")))
-    assert n_after < n_before and n_after <= 4
-    assert payload["files_before"] == n_before
-    assert payload["files_after"] == n_after
-    assert payload["row_count"] == payload["rows_after"] == 60
-
-    # content identical, partition layout contract intact
-    assert snapshot(store.read("nodes")) == before_rows
-    assert store.table_partitioning("nodes") == ["cls"]
-    import os as _os
-
-    subdirs = {
-        d for d in _os.listdir(store.path("nodes")) if d.startswith("cls=")
-    }
-    assert subdirs == {"cls=A", "cls=B"}
-
-    # time travel still reads through checkpoint lineage (compaction is
-    # not a data commit: as_of '__compact__' must NOT become addressable)
-    assert {r[3] for r in snapshot(store.read("nodes", as_of_run="r2"))} == {
-        "r0", "r1", "r2"
-    }
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="no surviving commit"):
-        store.read("nodes", as_of_run="__compact__")
-
-    # lineage artifact recorded
-    recs = [r for r in store.checkpoints("__compact__") if r["op"] == "compact"]
-    assert len(recs) == 1 and recs[0]["table_compacted"] == "nodes"
-
-
 def test_shuffle_partitions_for():
     from tab2neo_spark.session import shuffle_partitions_for
 

@@ -1,7 +1,8 @@
 """Regression tests for the round-5 self-review findings: numpy-scalar
 xlsx cells, duplicate headers, TTL terminators without whitespace,
-simhash block-selectivity warning, TTL 'id'-param preservation, bucketed
-compaction guard, continuous-query release."""
+simhash block-selectivity warning, TTL 'id'-param preservation,
+continuous-query release. The bucketed compaction guard's test lives in
+test_materialize."""
 
 from __future__ import annotations
 
@@ -126,16 +127,6 @@ x:a0 a x:Method ; x:type "get_data" ; x:id "get_data" .
 """
     m3 = DerivationMethod.from_ttl(spark, ref, source_df=td)
     assert m3.actions == [{"type": "get_data"}]
-
-
-def test_compact_refuses_bucketed_layout(spark, tmp_path):
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    store.write_bucketed(df, "edges", ["k"], n_buckets=2)
-    with pytest.raises(ValueError, match="bucketed layout"):
-        store.compact("edges__bucketed")
 
 
 def test_release_stop_and_timeout():
