@@ -13,7 +13,7 @@ Design:
   readback layer's class/rel filters directly (``_LAYOUT`` states each
   table's partition columns and dedup key once). Plain parquet only; an
   Iceberg deployment would replace the anti-join with MERGE INTO and the
-  rollback rewrite with a snapshot rollback.
+  rollback's file deletes with a snapshot rollback.
 - **Idempotency**: all ids are deterministic content hashes, so re-writing
   the same input produces byte-identical rows; dedup-on-write
   (anti-join against the existing table) replaces transactional MERGE.
@@ -21,9 +21,17 @@ Design:
   per-partition row histogram; a stage found 'done' in the checkpoint
   table is skipped on resume — re-running a crashed job re-does only the
   missing stages.
+- **Schema**: ``<table>__meta.json`` records the partition columns and
+  the union of every column ever written (partition columns last), so
+  every read is ``spark.read.schema(recorded)`` — no inference job, and
+  columns an older file lacks read as NULL.
 - **Rollback/compaction**: every row carries ``run_id`` (and ``_action``
-  when written by :func:`write_method_result`); parquet has no row-level
-  delete, so rollback and compaction both go through ONE in-place rewrite
+  when written by :func:`write_method_result`), and every file
+  ``write_stage`` appends holds one run (and one action). Rollback sorts
+  files by their parquet footer statistics, with no data scan: it deletes
+  the files holding only the dropped rows, leaves the files holding none
+  of them, and rewrites only the mixed ones (the copy-on-write DELETE of
+  Delta Lake). Mixed files and compaction go through ONE rewrite
   (:meth:`GraphStore._rewrite`).
 """
 
@@ -33,9 +41,11 @@ import json
 import os
 import shutil
 import time
+from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 # table -> (partition columns, dedup key). Every dedup key determines its
@@ -125,10 +135,13 @@ class GraphStore:
         if self.stage_done(run_id, stage):
             return self._read_ckpt(run_id, stage)
 
-        self._save_table_meta(table, partition_by or [])
         t0 = time.time()
         out = df.withColumn("run_id", F.lit(run_id))
         path = self.path(table)
+        # recorded BEFORE the write: a schema naming a column no file holds
+        # yet is harmless (it reads as NULL); a file holding a column the
+        # schema lacks would hide it
+        self._record_schema(table, partition_by or [], out.schema)
         n_pruned: int | None = None
 
         if dedup_key and os.path.isdir(path):
@@ -190,7 +203,7 @@ class GraphStore:
 
         Returns (dataframe, number of partitions scanned | None if
         unpartitioned/unprunable)."""
-        existing = self.spark.read.parquet(path)
+        existing = self._scan(os.path.relpath(path, self.root))
         parts = [p for p in (partition_by or []) if p in batch.columns]
         if not parts:
             return existing, None
@@ -244,10 +257,11 @@ class GraphStore:
         it renders as an ``isin`` literal the scan filters on.
 
         Divergence from real Iceberg (documented, inherent to plain
-        parquet): a ROLLED-BACK run's rows are physically rewritten away,
-        so time travel sees append history only — it cannot resurrect
-        rows a rollback removed; Iceberg's snapshot manifests can."""
-        df = self.spark.read.parquet(self.path(table))
+        parquet): a ROLLED-BACK run's files are physically deleted or
+        rewritten, so time travel sees append history only — it cannot
+        resurrect rows a rollback removed; Iceberg's snapshot manifests
+        can."""
+        df = self._scan(table)
         if as_of_run is None:
             return df
         commit_ts: dict[str, float] = {}
@@ -301,52 +315,114 @@ class GraphStore:
     def read_bucketed(self, table: str) -> DataFrame:
         return self.spark.table(self._catalog_name(table))
 
-    # -- table metadata (partition layout survives rollback rewrites) ---------
+    # -- table metadata (partition layout + recorded schema) -------------------
 
     def _meta_file(self, table: str) -> str:
         return f"{self.root}/{table}__meta.json"
 
-    def _save_table_meta(self, table: str, partition_by: list[str]) -> None:
-        if not os.path.exists(self._meta_file(table)):
-            with open(self._meta_file(table), "w") as f:
-                json.dump({"partition_by": partition_by}, f)
+    def _table_meta(self, table: str) -> dict:
+        try:
+            with open(self._meta_file(table)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
+
+    def _save_table_meta(self, table: str, meta: dict) -> None:
+        p = self._meta_file(table)
+        tmp = p + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+        os.replace(tmp, p)
 
     def table_partitioning(self, table: str) -> list[str]:
-        if os.path.exists(self._meta_file(table)):
-            with open(self._meta_file(table)) as f:
-                return json.load(f).get("partition_by", [])
-        return []
+        return self._table_meta(table).get("partition_by", [])
 
-    # -- in-place rewrite (rollback, compaction) -------------------------------
+    def _schema(self, table: str) -> StructType:
+        """The recorded schema. A table without one (raw parquet, or a
+        store that predates recorded schemas) is inferred once, merging
+        every footer, and recorded."""
+        meta = self._table_meta(table)
+        if "schema" not in meta:
+            merged = self.spark.read.option("mergeSchema", "true").parquet(self.path(table))
+            meta["schema"] = merged.schema.jsonValue()
+            self._save_table_meta(table, meta)
+        return StructType.fromJson(meta["schema"])
+
+    def _record_schema(
+        self, table: str, partition_by: list[str], schema: StructType
+    ) -> None:
+        """Widen the recorded schema by ``schema``'s new columns, on the
+        driver (no job once a schema is recorded). The first write's
+        ``partition_by`` is the table's; partition columns stay last, where
+        a partitioned read puts them."""
+        old = self._table_meta(table)
+        fields = {}
+        if "schema" in old or os.path.isdir(self.path(table)):
+            fields = {f.name: f for f in self._schema(table).fields}
+        for f in schema.fields:
+            fields.setdefault(f.name, f)
+        parts = old.get("partition_by", partition_by)
+        merged = StructType(
+            [f for name, f in fields.items() if name not in parts]
+            + [fields[p] for p in parts if p in fields]
+        )
+        meta = {"partition_by": parts, "schema": merged.jsonValue()}
+        if meta != old:
+            self._save_table_meta(table, meta)
+
+    def _scan(self, table: str, files=None) -> DataFrame:
+        """The one read of a stored table, under its recorded schema (no
+        inference job). ``files`` restricts it to those parquet files;
+        ``basePath`` keeps their partition values."""
+        reader = self.spark.read.schema(self._schema(table))
+        if files is None:
+            return reader.parquet(self.path(table))
+        return reader.option("basePath", self.path(table)).parquet(*sorted(files))
+
+    # -- file-level rewrite and delete (rollback, compaction) -----------------
+
+    @staticmethod
+    def _crc(f: str) -> str:
+        """The local filesystem's checksum sidecar of file ``f``."""
+        d, name = os.path.split(f)
+        return os.path.join(d, f".{name}.crc")
+
+    def _delete_files(self, table: str, files) -> None:
+        """Delete ``files`` with their checksum sidecars, then every
+        partition directory this leaves empty (never the table's own)."""
+        root = self.path(table)
+        for f in files:
+            os.remove(f)
+            with suppress(FileNotFoundError):
+                os.remove(self._crc(f))
+            d = os.path.dirname(f)
+            while len(d) > len(root) and not os.listdir(d):
+                os.rmdir(d)
+                d = os.path.dirname(d)
 
     def _rewrite(
-        self, table: str, transform, tag: str, expect_rows: int | None = None
-    ) -> bool:
-        """The one in-place rewrite of a table: ``transform`` the current
-        rows, write them to ``<table>__<tag>_tmp`` with the table's
-        ``__meta.json`` partitioning, then swap the temp dir in. Returns
-        False, touching nothing, when ``transform`` returns None.
+        self, table: str, files, transform, tag: str, expect_rows: int | None = None
+    ) -> None:
+        """The one rewrite of stored files: ``transform`` the rows of
+        ``files``, write them to ``<table>__<tag>_tmp`` with the table's
+        recorded partitioning, move the new files into the table, then
+        delete ``files``. Files outside ``files`` are never touched.
 
-        The read merges every file's schema: ``_action`` exists only on
-        rows written via :func:`write_method_result`, and a read that
-        samples one footer would drop it from every kept row. Keeping the
-        partition layout keeps partition pruning alive for later reads.
-        ``expect_rows`` checks the rewrite's footer row count before the
-        destructive swap (r5 ADVICE): a row-losing rewrite, or an append
-        landing between the read and the swap (every mutation assumes a
-        single writer), aborts with the original directory intact."""
+        ``expect_rows`` checks the rewrite's footer row count before
+        anything in the table changes (r5 ADVICE): a row-losing rewrite
+        aborts with the table intact. Every mutation assumes a single
+        writer. A crash after the move and before the delete leaves the
+        kept rows twice."""
         path = self.path(table)
-        out = transform(self.spark.read.option("mergeSchema", "true").parquet(path))
-        if out is None:
-            return False
         tmp = f"{path}__{tag}_tmp"
-        writer = out.write.mode("overwrite")
+        writer = transform(self._scan(table, files)).write.mode("overwrite")
         parts = self.table_partitioning(table)
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(tmp)
+        new = self._parquet_files(tmp)
         if expect_rows is not None:
-            rows_tmp = sum(self._footer_histogram(self._parquet_files(tmp)).values())
+            rows_tmp = sum(self._footer_histogram(new).values())
             if rows_tmp != expect_rows:
                 shutil.rmtree(tmp)
                 raise RuntimeError(
@@ -355,61 +431,107 @@ class GraphStore:
                     "(concurrent append, or a row-dropping read?); original "
                     "directory left untouched"
                 )
-        self._swap_dirs(tmp, path)
-        return True
-
-    @staticmethod
-    def _swap_dirs(src: str, dst: str) -> None:
-        shutil.rmtree(dst)
-        os.replace(src, dst)
+        for f in new:
+            dst = os.path.join(path, os.path.relpath(f, tmp))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(f, dst)
+            with suppress(FileNotFoundError):
+                os.replace(self._crc(f), self._crc(dst))
+        shutil.rmtree(tmp)
+        self._delete_files(table, files)
 
     # -- rollback ----------------------------------------------------------------
 
     def rollback_run(self, run_id: str, tables: list[str]) -> None:
-        """Delete a run's rows from each table (run_id column filter) and
-        mark its checkpoints rolled back. Parquet has no row-level delete,
-        so this rewrites the table without the run's rows — Iceberg/Delta
-        deployments do a metadata-only DELETE/snapshot rollback instead."""
+        """Delete a run's rows from each table and mark its checkpoints
+        rolled back. Files holding only the run's rows are deleted, files
+        holding none are left alone, and only mixed files (after
+        :meth:`compact`) are rewritten — so rolling back a run that was not
+        compacted since runs no Spark job."""
         self._rollback(run_id, tables)
 
     def rollback_action(self, run_id: str, action_idx: int, tables: list[str]) -> None:
         """Per-action rollback (the reference's Changes-node inverse,
         action.py:1699-1749 / derivation_method.py:596-671): revert ONE
         action's writes while keeping the rest of the run. Rows written via
-        :func:`write_method_result` carry ``_action``; the rewrite filters
-        on (run_id, _action) — Iceberg/Delta deployments do a row-level
-        DELETE instead. Tables without an ``_action`` column are left
-        alone."""
+        :func:`write_method_result` carry ``_action``; rows match on
+        (run_id, _action), file by file as in :meth:`rollback_run`. Rows
+        without an ``_action`` are never dropped."""
         self._rollback(run_id, tables, action_idx)
 
     def _rollback(
         self, run_id: str, tables: list[str], action_idx: int | None = None
     ) -> None:
+        match = {"run_id": run_id}
+        if action_idx is not None:
+            match["_action"] = action_idx
         # NULL-safe drop predicate: a NULL run_id or _action (rows from
         # writers other than write_method_result) must never turn the
         # keep-predicate NULL, which filter() would treat as a drop
-        drop = F.col("run_id").eqNullSafe(F.lit(run_id))
-        if action_idx is not None:
-            drop = drop & F.coalesce(F.col("_action") == action_idx, F.lit(False))
+        drop = F.lit(True)
+        for col, value in match.items():
+            drop = drop & F.coalesce(F.col(col) == value, F.lit(False))
 
-        def keep(df: DataFrame) -> DataFrame | None:
-            if action_idx is not None and "_action" not in df.columns:
-                return None  # no action-written rows in this table
-            return df.filter(~drop)
-
-        rewritten = {
-            t for t in tables
-            if os.path.isdir(self.path(t)) and self._rewrite(t, keep, "rollback")
-        }
-        # only the checkpoints of the REWRITTEN tables flip status: a
+        changed = set()
+        for t in tables:
+            path = self.path(t)
+            verdict = {f: self._footer_match(path, f, match)
+                       for f in self._parquet_files(path)}
+            mixed = [f for f, v in verdict.items() if v == "some"]
+            if mixed:
+                self._rewrite(t, mixed, lambda df: df.filter(~drop), "rollback")
+            pure = [f for f, v in verdict.items() if v == "all"]
+            self._delete_files(t, pure)
+            if mixed or pure:
+                changed.add(t)
+        # only the checkpoints of the CHANGED tables flip status: a
         # partial rollback must keep the other tables' commits visible —
         # time-travel reads (read(as_of_run=...)) derive visibility from
         # per-table checkpoint status
         marker = "" if action_idx is None else f"__a{action_idx}_"
         for rec in self.checkpoints(run_id):
-            if rec.get("table") in rewritten and marker in rec["stage"]:
+            if rec.get("table") in changed and marker in rec["stage"]:
                 rec["status"] = "rolled_back"
                 self.write_checkpoint(run_id, rec["stage"], rec)
+
+    @staticmethod
+    def _footer_match(root: str, f: str, match: dict) -> str:
+        """Which rows of parquet file ``f`` equal every ``match`` column
+        value: ``"all"``, ``"none"`` or ``"some"``, from the footer's
+        per-row-group min/max/null statistics alone (no data scan). A
+        column the file lacks is NULL, which never matches, unless it is a
+        partition column (a ``col=`` directory), whose value the footer
+        does not hold. Missing statistics, or any NULL, count as "some"."""
+        import pyarrow.parquet as pq
+
+        md = pq.ParquetFile(f).metadata
+        if md.num_row_groups == 0:
+            return "none"
+        cols = {md.row_group(0).column(j).path_in_schema: j
+                for j in range(md.num_columns)}
+        segments = os.path.relpath(f, root).split(os.sep)[:-1]
+        groups = set()
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            seen = set()
+            for col, value in match.items():
+                if col not in cols:
+                    partition = any(s.startswith(f"{col}=") for s in segments)
+                    seen.add("some" if partition else "none")
+                    continue
+                st = rg.column(cols[col]).statistics
+                if (st is None or not st.has_min_max or not st.has_null_count
+                        or st.null_count):
+                    seen.add("some")
+                elif st.min == st.max == value:
+                    seen.add("all")
+                elif value < st.min or value > st.max:
+                    seen.add("none")
+                else:
+                    seen.add("some")
+            # the drop predicate is a conjunction over the match columns
+            groups.add("none" if "none" in seen else "some" if "some" in seen else "all")
+        return groups.pop() if len(groups) == 1 else "some"
 
     # -- compaction (small-file hygiene) ---------------------------------------
 
@@ -450,7 +572,8 @@ class GraphStore:
                 return df.repartition(*[F.col(p) for p in parts])
             return df.repartition(max(1, -(-bytes_before // max(target_file_bytes, 1))))
 
-        self._rewrite(table, repartition, "compact", expect_rows=rows_before)
+        if before:
+            self._rewrite(table, before, repartition, "compact", expect_rows=rows_before)
 
         after = self._parquet_files(path)
         payload = {

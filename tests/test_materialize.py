@@ -465,3 +465,162 @@ def test_rollback_action_flips_only_rewritten_tables_checkpoints(spark, tmp_path
     assert by_stage["m__a2_edges0"] == "rolled_back"
     assert by_stage["m__a2_nodes1"] == "done"
     assert store.stage_done("r1", "m__a2_nodes1")
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"probe_{id(fn)}"
+    sc.setJobGroup(group, "GraphStore job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _two_action_method(spark):
+    """A derivation method whose nodes come from action 1 (Subject) and
+    action 2 (Sex)."""
+    from tab2neo_spark.pipeline.runner import DerivationMethod
+
+    res = DerivationMethod(spark, {
+        "name": "m",
+        "actions": [
+            {"type": "get_data"},
+            {"type": "assign_class", "class": "Subject", "value_column": "Subject"},
+            {"type": "assign_class", "class": "Sex", "value_column": "Sex"},
+        ],
+    }, source_df=spark.createDataFrame(
+        [("S1", "M"), ("S2", "F")], "Subject string, Sex string")).apply()
+    assert res.node_actions == [1, 2]
+    return res
+
+
+def test_fully_rolled_back_table_stays_usable(spark, tmp_path):
+    """Rolling back the only run of a table deletes every file; the table
+    still reads (empty) and a keyed re-write stores every row again."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    df = spark.createDataFrame(
+        [(i, "AB"[i % 2], f"n{i}") for i in range(10)],
+        "node_id long, class string, rdfs_label string",
+    )
+
+    def write():
+        return store.write_stage(df, "nodes", "r1", "s", partition_by=["class"],
+                                 dedup_key=["node_id"])
+
+    write()
+    store.rollback_run("r1", ["nodes"])
+    assert store._parquet_files(store.path("nodes")) == set()
+    empty = store.read("nodes")
+    assert empty.count() == 0
+    assert {"node_id", "class", "rdfs_label", "run_id"} <= set(empty.columns)
+    assert write()["row_count"] == 10
+    assert store.read("nodes").count() == 10
+
+
+def test_rollback_over_compacted_mixed_files(spark, tmp_path):
+    """After compact, files hold several runs and actions: rollback
+    rewrites only those mixed files, drops exactly the matching rows,
+    keeps the other action's provenance and leaves an unrelated file
+    byte-for-byte where it was."""
+    import os
+    from collections import Counter
+
+    from tab2neo_spark.kg.materialize import write_method_result
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+
+    def plain(rows, run):
+        store.write_stage(spark.createDataFrame(rows, schema), "nodes", run, "plain",
+                          partition_by=["class"], dedup_key=["node_id"])
+
+    plain([(1, "Arm", "a1"), (2, "Arm", "a2"), (3, "Subject", "s0")], "r1")
+    write_method_result(store, _two_action_method(spark), "r2", "m")
+    plain([(4, "Sex", "x"), (5, "Visit", "v1")], "r3")
+    store.compact("nodes")
+
+    cols = ["node_id", "class", "rdfs_label", "run_id", "_action"]
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.select(*cols).collect())
+
+    before = store.read("nodes")
+    expected = rows(before.filter(
+        ~((F.col("run_id") == "r2") & F.coalesce(F.col("_action") == 1, F.lit(False)))
+        & (F.col("run_id") != "r3")))
+    (arm,) = [f for f in store._parquet_files(store.path("nodes")) if "class=Arm" in f]
+    arm_mtime = os.stat(arm).st_mtime_ns
+
+    store.rollback_action("r2", 1, ["nodes"])
+    store.rollback_run("r3", ["nodes"])
+
+    after = store.read("nodes")
+    assert rows(after) == expected
+    r2 = after.filter(F.col("run_id") == "r2").collect()
+    assert {(r["class"], r["_action"]) for r in r2} == {("Sex", 2)}
+    assert os.path.exists(arm) and os.stat(arm).st_mtime_ns == arm_mtime
+    assert not os.path.exists(os.path.join(store.path("nodes"), "class=Visit"))
+
+
+def test_store_reads_and_uncompacted_rollbacks_run_no_job(spark, tmp_path):
+    """Reads use the recorded schema (no inference job), and rolling back
+    a run or an action that was not compacted only deletes files."""
+    from tab2neo_spark.kg.materialize import write_method_result
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    df = spark.createDataFrame([(1, "A", "a"), (2, "B", "b")],
+                               "node_id long, class string, rdfs_label string")
+    store.write_stage(df, "nodes", "r0", "s", partition_by=["class"], dedup_key=["node_id"])
+    write_method_result(store, _two_action_method(spark), "r1", "m")
+
+    nodes, n = _jobs(spark, lambda: store.read("nodes"))
+    assert n == 0
+    assert "_action" in nodes.columns
+    _, n = _jobs(spark, lambda: store.rollback_action("r1", 2, ["nodes"]))
+    assert n == 0
+    assert {r["class"] for r in store.read("nodes").collect()} == {"A", "B", "Subject"}
+    _, n = _jobs(spark, lambda: store.rollback_run("r1", ["nodes", "edges"]))
+    assert n == 0
+    assert {r["class"] for r in store.read("nodes").collect()} == {"A", "B"}
+
+
+def test_keyed_write_into_existing_table_runs_no_inference_job(spark, tmp_path):
+    """A keyed write into an existing partitioned table runs the
+    partition-value probe and the anti-join write, 4 jobs here, and no
+    schema inference: inferring the existing table's schema made it 5."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+    first = spark.createDataFrame([(1, "A", "a1"), (2, "B", "b1")], schema)
+    store.write_stage(first, "nodes", "r1", "s1", partition_by=["class"], dedup_key=["node_id"])
+    batch = spark.createDataFrame([(1, "A", "a1"), (3, "A", "a3")], schema)
+    payload, n = _jobs(spark, lambda: store.write_stage(
+        batch, "nodes", "r2", "s2", partition_by=["class"], dedup_key=["node_id"]))
+    assert payload["row_count"] == 1
+    assert n == 4, f"keyed write ran {n} jobs, expected 4"
+
+
+def test_recorded_schema_is_the_union_of_writes(spark, tmp_path):
+    """``_action`` joins the recorded schema when write_method_result first
+    writes it: read() exposes it, NULL on the older rows, with the
+    partition column last."""
+    import json
+
+    from tab2neo_spark.kg.materialize import write_method_result
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    df = spark.createDataFrame([(1, "A", "a")], "node_id long, class string, rdfs_label string")
+    store.write_stage(df, "nodes", "r0", "s", partition_by=["class"], dedup_key=["node_id"])
+    write_method_result(store, _two_action_method(spark), "r1", "m")
+
+    nodes = store.read("nodes")
+    assert "_action" in nodes.columns and nodes.columns[-1] == "class"
+    got = {r["rdfs_label"]: r["_action"] for r in nodes.collect()}
+    assert got["a"] is None
+    assert got["S1"] == 1 and got["M"] == 2
+    with open(store._meta_file("nodes")) as f:
+        meta = json.load(f)
+    assert meta["partition_by"] == ["class"]
+    assert [c["name"] for c in meta["schema"]["fields"]] == nodes.columns
