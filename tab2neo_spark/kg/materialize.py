@@ -17,6 +17,8 @@ Design:
 - **Idempotency**: all ids are deterministic content hashes, so re-writing
   the same input produces byte-identical rows; dedup-on-write
   (anti-join against the existing table) replaces transactional MERGE.
+  The anti-join reads only the partitions the batch can touch, taken from
+  the batch's plan constraints where they bound them (no job).
 - **Lineage**: one checkpoint row per (run_id, stage) with row counts +
   per-partition row histogram; a stage found 'done' in the checkpoint
   table is skipped on resume — re-running a crashed job re-does only the
@@ -38,10 +40,13 @@ Design:
 from __future__ import annotations
 
 import json
+import math
+import operator
 import os
 import shutil
 import time
 from contextlib import suppress
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +61,68 @@ _LAYOUT = {
     "triples": (["pred"], ["subj", "pred", "obj"]),
     "labels": (["extra_label"], ["node_id", "extra_label"]),
 }
+
+
+def _constrained_values(df: DataFrame, cols: list[str]) -> dict[str, set[str]] | None:
+    """{column: the values ``df``'s optimized-plan constraints allow it},
+    read on the driver with no job, or None unless every one of ``cols``
+    is bounded.
+
+    Only ``=``, ``<=>``, ``IN`` and ``INSET`` between a column of plain
+    ``string`` type and non-NULL literals bound it (a collated string's
+    ``=`` admits values other than the literal); several constraints on
+    one column intersect. Constraints follow from the plan's filters and
+    literal projections (``F.lit(c).alias("class")``), so the result is a
+    superset of the values the rows hold."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    output = plan.output()
+    attrs = {}
+    for i in range(output.size()):
+        a = output.apply(i)
+        if a.name() in cols and a.dataType().typeName() == "string":
+            attrs[a.exprId().id()] = a.name()
+
+    def kind(e) -> str:
+        return e.getClass().getSimpleName()
+
+    def column(e) -> str | None:
+        return attrs.get(e.exprId().id()) if kind(e) == "AttributeReference" else None
+
+    def literals(es) -> set[str] | None:
+        if any(kind(e) != "Literal" or e.value() is None for e in es):
+            return None
+        return {str(e.value()) for e in es}
+
+    bounds: dict[str, set[str]] = {}
+    it = plan.constraints().iterator()
+    while it.hasNext():
+        c = it.next()
+        k = kind(c)
+        col = vals = None
+        if k in ("EqualTo", "EqualNullSafe"):
+            for a, b in ((c.left(), c.right()), (c.right(), c.left())):
+                if column(a) is not None:
+                    col, vals = column(a), literals([b])
+                    break
+        elif k == "In":
+            col = column(c.value())
+            lst = c.list()
+            vals = literals([lst.apply(i) for i in range(lst.size())])
+        elif k == "InSet":
+            col = column(c.child())
+            h = c.hset().iterator()
+            vals = set()
+            while h.hasNext():
+                v = h.next()
+                if v is None:
+                    vals = None
+                    break
+                vals.add(str(v))
+        if col is not None and vals is not None:
+            bounds[col] = bounds[col] & vals if col in bounds else vals
+    if set(bounds) != set(cols):
+        return None
+    return bounds
 
 
 class GraphStore:
@@ -191,18 +258,23 @@ class GraphStore:
         """Existing-table read for the keyed upsert's anti-join, PRUNED to
         the partitions the incoming batch touches. Without this, every
         incremental write re-reads the whole target table — a full-table
-        scan per append at 100 TB. The partition-value discovery is one
+        scan per append at 100 TB. The predicate reaches the parquet scan
+        as PartitionFilters.
+
+        The partition values come from the batch's plan constraints
+        (:func:`_constrained_values`, no job) when they bound every
+        partition column: a superset of the values the batch holds, which
+        prunes just as correctly. Otherwise they are discovered by one
         extra job over the batch projected to the partition columns
-        (low-cardinality by design: class/rel_type/pred), and the isin
-        predicate reaches the parquet scan as PartitionFilters.
+        (low-cardinality by design: class/rel_type/pred).
 
         CONTRACT: valid because every dedup key determines its partition
         columns (node_id = xxhash64(class, key) embeds class; edge and
         triple keys contain rel_type/pred outright) — a duplicate key can
         only ever live in a partition the batch also touches.
 
-        Returns (dataframe, number of partitions scanned | None if
-        unpartitioned/unprunable)."""
+        Returns (dataframe, number of partition values the predicate
+        names | None if unpartitioned/unprunable)."""
         existing = self._scan(os.path.relpath(path, self.root))
         parts = [p for p in (partition_by or []) if p in batch.columns]
         if not parts:
@@ -212,6 +284,12 @@ class GraphStore:
         # high-cardinality key, a thousands-branch OR would bloat the plan
         # for little pruning benefit — fall back to the full read
         limit = 256
+        bounds = _constrained_values(batch, parts)
+        if bounds is not None:
+            n = math.prod(len(v) for v in bounds.values())
+            if n <= limit:
+                pred = [F.col(p).isin(sorted(v)) for p, v in bounds.items()]
+                return existing.filter(reduce(operator.and_, pred)), n
         values = batch.select(*parts).distinct().limit(limit + 1).collect()
         if len(values) > limit:
             return existing, None

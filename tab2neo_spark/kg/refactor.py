@@ -230,7 +230,14 @@ class RefactorEngine:
         """(nodes, row_map, edges) of a ``_project`` result, each ONE
         explode of an array of per-row ``when(present, struct)`` values
         followed by one dedup. Edges are FROM_DATA (entity slots only) and,
-        when ``linked``, the typed relationships and IS_A of every slot."""
+        when ``linked``, the typed relationships and IS_A of every slot.
+
+        Nodes and edges end in an ``isin`` filter on the partition column
+        (``class`` / ``rel_type``) naming the literals the structs hold. It
+        drops no row, but the explode (Generate) forgets that those columns
+        are literals, and the filter restates it as a plan constraint: a
+        keyed write then prunes its anti-join with no probe job over the
+        batch (``materialize._constrained_values``)."""
 
         def fan_out(structs: list) -> DataFrame:
             return proj.select(F.inline(F.array_compact(F.array(*structs))))
@@ -252,7 +259,7 @@ class RefactorEngine:
                 F.col(f"_m{i}").alias("props"),
             ))
             for i, c in enumerate(classes)
-        ]).dropDuplicates(["node_id"])
+        ]).dropDuplicates(["node_id"]).filter(F.col("class").isin(classes))
         row_map = fan_out([
             F.when(p[i], F.struct(
                 F.col("_row_id").alias("row_id"), F.lit(c).alias("class"),
@@ -262,16 +269,18 @@ class RefactorEngine:
         ]).dropDuplicates()
         # FROM_DATA provenance: entity -> source row node id
         structs = [edge(p[i], n[i], FROM_DATA, F.col("_row_id")) for i in range(n_specs)]
+        rel_types = [FROM_DATA]
         if linked:
-            structs += [
-                edge(p[i] & p[j], n[i], t, n[j]) for t, i, j in self._rel_pairs(classes)
-            ]
+            pairs = self._rel_pairs(classes)
+            structs += [edge(p[i] & p[j], n[i], t, n[j]) for t, i, j in pairs]
             # R4: instance -> Class-node edges (the class id is a constant)
             structs += [
                 edge(p[i], n[i], IS_A, F.xxhash64(F.lit("Class"), F.lit(c)))
                 for i, c in enumerate(classes)
             ]
-        return nodes, row_map, fan_out(structs).dropDuplicates()
+            rel_types += [t for t, _, _ in pairs] + [IS_A]
+        edges = fan_out(structs).dropDuplicates().filter(F.col("rel_type").isin(rel_types))
+        return nodes, row_map, edges
 
     def extract_class_entities(
         self, df: DataFrame, specs: list[ExtractionSpec], domain: str

@@ -667,12 +667,15 @@ class DerivationMethod:
         df = res.df
         rel_type = a["relationship_type"]
 
+        # partition columns are projected as literals, not read from the
+        # one-row frame: the literal is a plan constraint, so the keyed
+        # write prunes its anti-join without a probe job
         def _literal_node(cls: str, value: str) -> DataFrame:
             node = self.spark.createDataFrame(
-                [(cls, str(value))], "class string, rdfs_label string"
+                [(str(value),)], "rdfs_label string"
             ).select(
                 F.xxhash64(F.lit(cls), F.col("rdfs_label")).alias("node_id"),
-                "class",
+                F.lit(cls).alias("class"),
                 "rdfs_label",
                 node_uri_col(F.lit(cls), F.col("rdfs_label")).alias("uri"),
                 F.lit(None).cast("map<string,string>").alias("props"),
@@ -712,11 +715,11 @@ class DerivationMethod:
         if has_from_lit and has_to_lit:
             # scenario 4: a single edge between the two merged nodes
             edges = self.spark.createDataFrame(
-                [(str(a["from_value"]), rel_type, str(a["to_value"]))],
-                "fv string, rel_type string, tv string",
+                [(str(a["from_value"]), str(a["to_value"]))],
+                "fv string, tv string",
             ).select(
                 F.xxhash64(F.lit(a["from_class"]), F.col("fv")).alias("src"),
-                "rel_type",
+                F.lit(rel_type).alias("rel_type"),
                 F.xxhash64(F.lit(a["to_class"]), F.col("tv")).alias("dst"),
             )
             res.new_edges.append(edges)

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import itertools
 import tempfile
 
 import pytest
@@ -467,10 +468,15 @@ def test_rollback_action_flips_only_rewritten_tables_checkpoints(spark, tmp_path
     assert store.stage_done("r1", "m__a2_nodes1")
 
 
+_JOB_GROUPS = itertools.count()
+
+
 def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran)."""
+    """(fn(), number of Spark jobs fn ran). Each call gets a fresh job
+    group: a group named after ``id(fn)`` would be reused once ``fn`` is
+    freed and count an earlier call's jobs too."""
     sc = spark.sparkContext
-    group = f"probe_{id(fn)}"
+    group = f"probe_{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, "GraphStore job-count probe")
     try:
         out = fn()
@@ -624,3 +630,226 @@ def test_recorded_schema_is_the_union_of_writes(spark, tmp_path):
         meta = json.load(f)
     assert meta["partition_by"] == ["class"]
     assert [c["name"] for c in meta["schema"]["fields"]] == nodes.columns
+
+
+# -- keyed writes: partition values from plan constraints ---------------------
+
+
+def _orders_model():
+    """Order/Customer/Priority columns of an OrderRow table, with the two
+    schema relationships between them."""
+    from tab2neo_spark.model.metadata import MetadataModel
+
+    m = MetadataModel()
+    m.create_related_classes_from_list(
+        [["OrderRow", c, c] for c in ("Order", "Customer", "Priority")])
+    m.create_relationship("Order", "Customer", "PLACED_BY")
+    m.create_relationship("Order", "Priority", "HAS_PRIORITY")
+    return m
+
+
+def _order_rows(lo, hi):
+    return [(f"O{i}", f"C{i % 3}", ["1-URGENT", "2-HIGH", None][i % 3])
+            for i in range(lo, hi)]
+
+
+def _orders_store(spark, tmp_path):
+    """(store, model, upsert) with rows 0-5 stored by refactor_all;
+    ``upsert(rows, run)`` writes a parquet batch's refactored nodes and
+    edges and returns ((payload, jobs) for nodes, (payload, jobs) for
+    edges)."""
+    from tab2neo_spark.kg.refactor import RefactorEngine
+
+    model = _orders_model()
+    store = GraphStore(spark, str(tmp_path / "g"))
+
+    def upsert(rows, run):
+        src = str(tmp_path / f"src_{run}")
+        spark.createDataFrame(
+            rows, "Order string, Customer string, Priority string").write.parquet(src)
+        res = RefactorEngine(spark, model).refactor_all(spark.read.parquet(src), "OrderRow")
+        return tuple(
+            _jobs(spark, lambda df=df, t=t: store.write_stage(
+                df, t, run, f"tab_{t}", partition_by=parts, dedup_key=key))
+            for t, df, parts, key in (
+                ("nodes", res.nodes, ["class"], ["node_id"]),
+                ("edges", res.edges, ["rel_type"], ["src", "rel_type", "dst"]))
+        )
+
+    upsert(_order_rows(0, 6), "base")
+    return store, model, upsert
+
+
+def _method(spark, store, model, actions):
+    from tab2neo_spark.pipeline.runner import DerivationMethod
+    from tab2neo_spark.provider import DataProvider
+
+    provider = DataProvider(spark, model, store.read("nodes"), store.read("edges"))
+    return DerivationMethod(spark, {"name": "m", "actions": actions},
+                            provider=provider).apply()
+
+
+def test_refactor_upsert_and_method_write_skip_the_partition_probe(spark, tmp_path):
+    """Keyed writes into an existing partitioned store take their partition
+    values from the batch's plan constraints, so they run no probe job:
+    a refactor_all nodes upsert 3 jobs and its edges upsert 3 (6 and 5
+    with the probe), and write_method_result of get_data -> assign_class
+    -> link 10 jobs (18 with the probe)."""
+    from tab2neo_spark.kg.materialize import write_method_result
+
+    store, model, upsert = _orders_store(spark, tmp_path)
+    (nodes, n_nodes), (edges, n_edges) = upsert(_order_rows(3, 9), "r1")
+    assert (nodes["row_count"], edges["row_count"]) == (3, 16)
+    # Order/Customer/Priority; FROM_DATA/PLACED_BY/HAS_PRIORITY/IS_A
+    assert (nodes["dedup_scan_partitions"], edges["dedup_scan_partitions"]) == (3, 4)
+    assert (n_nodes, n_edges) == (3, 3)
+
+    res = _method(spark, store, model, [
+        {"type": "get_data", "labels": ["Order", "Priority"], "include_ids": True,
+         "rels": [{"from": "Order", "to": "Priority", "type": "HAS_PRIORITY"}]},
+        {"type": "assign_class", "class": "Urgency", "value_column": "Priority"},
+        {"type": "link", "relationship_type": "HAS_URGENCY",
+         "from_id": "_id_Order", "to_id": "_id_Urgency"},
+    ])
+    written, n = _jobs(spark, lambda: write_method_result(store, res, "r1", "m"))
+    assert {k: v["row_count"] for k, v in written.items()} == {
+        "m__a1_nodes0": 2, "m__a2_edges0": 6}
+    assert {v["dedup_scan_partitions"] for v in written.values()} == {1}
+    assert n == 10
+
+
+def test_literal_link_node_skips_the_partition_probe(spark, tmp_path):
+    """A ``to_value`` link's merged node states its class as a literal, so
+    writing the method's result runs 5 jobs (9 when the class was read
+    from a one-row frame and probed), with the same rows."""
+    from tab2neo_spark.kg.materialize import write_method_result
+
+    store, model, _ = _orders_store(spark, tmp_path)
+    res = _method(spark, store, model, [
+        {"type": "get_data", "labels": ["Order"], "include_ids": True},
+        {"type": "link", "relationship_type": "FLAGGED", "from_id": "_id_Order",
+         "to_class": "Flag", "to_value": "yes"},
+    ])
+    written, n = _jobs(spark, lambda: write_method_result(store, res, "r1", "flag"))
+    assert n == 5
+    assert {v["dedup_scan_partitions"] for v in written.values()} == {1}
+
+    (flag,) = spark.range(1).select(
+        F.xxhash64(F.lit("Flag"), F.lit("yes")).alias("id")).first()
+    nodes = store.read("nodes").filter(F.col("run_id") == "r1")
+    assert [(r["node_id"], r["class"], r["rdfs_label"], r["_action"])
+            for r in nodes.collect()] == [(flag, "Flag", "yes", 1)]
+    orders = {r["node_id"] for r in store.read("nodes")
+              .filter(F.col("class") == "Order").collect()}
+    edges = store.read("edges").filter(F.col("run_id") == "r1")
+    assert sorted((r["src"], r["rel_type"], r["dst"]) for r in edges.collect()) == \
+        sorted((o, "FLAGGED", flag) for o in orders)
+
+
+_NODE_SCHEMA = "node_id long, class string, rdfs_label string"
+
+
+def _literal(spark, cls, rows):
+    return spark.createDataFrame(rows, "node_id long, rdfs_label string").select(
+        "node_id", F.lit(cls).alias("class"), "rdfs_label")
+
+
+_ROUTE_CASES = {
+    # name: (batch builder, bounded by its constraints?)
+    "literal_class": (lambda s: _literal(s, "A", [(1, "a1"), (4, "a4")]), True),
+    "isin_superset": (lambda s: s.createDataFrame(
+        [(1, "A", "a1"), (4, "A", "a4"), (2, "B", "b1"), (6, "B", "b6")], _NODE_SCHEMA)
+        .filter(F.col("class").isin("A", "B", "Z")), True),
+    "union_of_literals": (lambda s: _literal(s, "A", [(1, "a1"), (4, "a4")])
+                          .unionByName(_literal(s, "B", [(2, "b1"), (6, "b6")])), False),
+    "null_literal": (lambda s: s.createDataFrame(
+        [(5, "n1"), (7, "n7")], "node_id long, rdfs_label string").select(
+        "node_id", F.lit(None).cast("string").alias("class"), "rdfs_label"), False),
+    "int_partition": (lambda s: s.createDataFrame(
+        [(1, "a1"), (9, "a9")], "node_id long, rdfs_label string").select(
+        "node_id", "rdfs_label", F.lit(3).alias("class")), False),
+    "propagation_off": (lambda s: _literal(s, "A", [(1, "a1"), (4, "a4")]), False),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ROUTE_CASES))
+def test_constraint_route_equals_probe_route(spark, tmp_path, case):
+    """A batch whose constraints bound its partition values stores the same
+    rows as the same rows from createDataFrame (no constraints: the probe
+    route). Unions, NULL literals, non-string partition columns and a
+    session without constraint propagation fall back to the probe."""
+    from collections import Counter
+
+    from tab2neo_spark.kg.materialize import _constrained_values
+
+    build, bounded = _ROUTE_CASES[case]
+    int_parts = case == "int_partition"
+    seed = spark.createDataFrame(
+        [(1, 3, "a1"), (2, 4, "b1")] if int_parts
+        else [(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1"), (5, None, "n1")],
+        "node_id long, class int, rdfs_label string" if int_parts else _NODE_SCHEMA)
+    conf = "spark.sql.constraintPropagation.enabled"
+    if case == "propagation_off":
+        spark.conf.set(conf, "false")
+    try:
+        batch = build(spark)
+        twin = spark.createDataFrame(batch.collect(), batch.schema)
+        assert (_constrained_values(batch, ["class"]) is not None) == bounded
+        assert _constrained_values(twin, ["class"]) is None
+        stored = []
+        for name, df in (("constraint", batch), ("probe", twin)):
+            store = GraphStore(spark, str(tmp_path / name))
+            for run, rows in (("r1", seed), ("r2", df)):
+                store.write_stage(rows, "nodes", run, "s", partition_by=["class"],
+                                  dedup_key=["node_id"])
+            cols = sorted(store.read("nodes").columns)
+            stored.append(Counter(tuple(r) for r in store.read("nodes").select(*cols).collect()))
+    finally:
+        spark.conf.unset(conf)
+    assert stored[0] == stored[1]
+    assert sum(n for r, n in stored[0].items() if "r2" in r) > 0
+
+
+def test_constraint_route_prunes_the_scan_with_no_job(spark, tmp_path):
+    """On the constraint route the anti-join's existing-side scan carries
+    PartitionFilters on the proven values, no job runs to find them, and
+    dedup_scan_partitions counts the values the predicate names."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    store.write_stage(
+        spark.createDataFrame([(1, "A", "a1"), (2, "B", "b1"), (3, "C", "c1")], _NODE_SCHEMA),
+        "nodes", "r1", "s1", partition_by=["class"], dedup_key=["node_id"])
+
+    batch = _literal(spark, "A", [(1, "a1"), (4, "a4")])
+    (existing, n), jobs = _jobs(
+        spark, lambda: store._existing_for_dedup(store.path("nodes"), batch, ["class"]))
+    assert (n, jobs) == (1, 0)
+    plan = existing._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan and "class" in plan.split("PartitionFilters")[1][:120]
+    assert {r["class"] for r in existing.collect()} == {"A"}
+    payload = store.write_stage(batch, "nodes", "r2", "s2", partition_by=["class"],
+                                dedup_key=["node_id"])
+    assert (payload["dedup_scan_partitions"], payload["row_count"]) == (1, 1)
+
+    # a proven superset: three values named, B's row is a duplicate
+    superset = spark.createDataFrame([(2, "B", "b1"), (5, "B", "b5")], _NODE_SCHEMA) \
+        .filter(F.col("class").isin("A", "B", "Z"))
+    payload = store.write_stage(superset, "nodes", "r3", "s3", partition_by=["class"],
+                                dedup_key=["node_id"])
+    assert (payload["dedup_scan_partitions"], payload["row_count"]) == (3, 1)
+
+
+def test_partition_value_cap_holds_on_both_routes(spark, tmp_path):
+    """More than 256 partition values read the whole table on the probe
+    route; a constraint naming more than 256 values falls back to the
+    probe, which finds the batch's own few."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    store.write_stage(spark.createDataFrame([(1, "A", "a1")], _NODE_SCHEMA), "nodes", "r1",
+                      "s1", partition_by=["class"], dedup_key=["node_id"])
+    wide = spark.createDataFrame([(i, f"K{i}", "x") for i in range(300)], _NODE_SCHEMA)
+    _, n = store._existing_for_dedup(store.path("nodes"), wide, ["class"])
+    assert n is None
+    many = [f"K{i}" for i in range(300)] + ["A"]
+    loose = spark.createDataFrame([(1, "A", "a1"), (2, "K7", "k")], _NODE_SCHEMA) \
+        .filter(F.col("class").isin(many))
+    _, n = store._existing_for_dedup(store.path("nodes"), loose, ["class"])
+    assert n == 2
