@@ -3,7 +3,7 @@
 A from-scratch reimagination of GSK-Biostatistics/tab2neo's table-to-graph
 pipeline (reference at /root/reference, read-only) for Spark:
 
-- Neo4j property graph            -> partitioned parquet/Iceberg node/edge/triple tables
+- Neo4j property graph            -> partitioned parquet node/edge/triple tables
 - Cypher codegen (QueryBuilder)   -> DataFrame/Catalyst logical plans
 - Neo4j MERGE dedup               -> deterministic ids + connected-components canonicalization
 - derivation-method DAG           -> declarative pipeline of DataFrame stages w/ checkpoints

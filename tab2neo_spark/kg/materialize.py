@@ -157,18 +157,27 @@ class GraphStore:
         with open(p) as f:
             return json.load(f)
 
+    @staticmethod
+    def _write_json(path: str, obj: dict) -> None:
+        """Write ``obj`` to a temp file and rename it over ``path``, so a
+        reader sees the old record or the new one, never a partial one."""
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+
     def write_checkpoint(self, run_id: str, stage: str, payload: dict) -> None:
         """Atomic (write-temp + rename) local checkpoint record; on a real
         cluster this is an Iceberg/Delta append to a checkpoint table —
         both give the same all-or-nothing visibility."""
         os.makedirs(self._ckpt_dir(), exist_ok=True)
-        p = self._ckpt_file(run_id, stage)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, p)
+        self._write_json(self._ckpt_file(run_id, stage), payload)
 
     def checkpoints(self, run_id: str | None = None) -> list[dict]:
+        """Checkpoint records, all of them or only ``run_id``'s. The file
+        name prefix only narrows the reads: run ``r``'s prefix also names
+        run ``r__retry``'s files, so a record belongs to the run it
+        states."""
         out = []
         d = self._ckpt_dir()
         if not os.path.isdir(d):
@@ -179,7 +188,9 @@ class GraphStore:
             if run_id and not fn.startswith(f"{run_id}__"):
                 continue
             with open(f"{d}/{fn}") as f:
-                out.append(json.load(f))
+                rec = json.load(f)
+            if not run_id or rec.get("run_id") == run_id:
+                out.append(rec)
         return out
 
     # -- writes ----------------------------------------------------------------
@@ -355,44 +366,6 @@ class GraphStore:
         visible = sorted(r for r, t in commit_ts.items() if t <= cutoff)
         return df.filter(F.col("run_id").isin(visible))
 
-    # -- bucketed layout (co-located joins at rest) ----------------------------
-
-    def _catalog_name(self, table: str) -> str:
-        import hashlib as _hl
-
-        tag = _hl.md5(self.root.encode()).hexdigest()[:8]
-        return f"gs_{tag}_{table}"
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_cols: list[str],
-        n_buckets: int = 8,
-        sort_cols: list[str] | None = None,
-    ) -> str:
-        """Bucketed-at-rest layout (docs/PLANS.md §4b): tables that join
-        repeatedly on ``bucket_cols`` (edges<->edges on node ids) are
-        written ``bucketBy(n, cols).sortBy(cols)`` so the join needs ZERO
-        Exchange — co-location is baked into the files. Bucketing metadata
-        lives in the session catalog (plain parquet paths cannot carry
-        it), with the data files under this store's root. Returns the
-        catalog table name to join against (``spark.table(name)``)."""
-        name = self._catalog_name(table)
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        writer = (
-            df.write.mode("overwrite")
-            .option("path", self.path(table + "__bucketed"))
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*(sort_cols or bucket_cols))
-            .format("parquet")
-        )
-        writer.saveAsTable(name)
-        return name
-
-    def read_bucketed(self, table: str) -> DataFrame:
-        return self.spark.table(self._catalog_name(table))
-
     # -- table metadata (partition layout + recorded schema) -------------------
 
     def _meta_file(self, table: str) -> str:
@@ -405,13 +378,6 @@ class GraphStore:
         except FileNotFoundError:
             return {}
 
-    def _save_table_meta(self, table: str, meta: dict) -> None:
-        p = self._meta_file(table)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, p)
-
     def table_partitioning(self, table: str) -> list[str]:
         return self._table_meta(table).get("partition_by", [])
 
@@ -423,7 +389,7 @@ class GraphStore:
         if "schema" not in meta:
             merged = self.spark.read.option("mergeSchema", "true").parquet(self.path(table))
             meta["schema"] = merged.schema.jsonValue()
-            self._save_table_meta(table, meta)
+            self._write_json(self._meta_file(table), meta)
         return StructType.fromJson(meta["schema"])
 
     def _record_schema(
@@ -446,7 +412,7 @@ class GraphStore:
         )
         meta = {"partition_by": parts, "schema": merged.jsonValue()}
         if meta != old:
-            self._save_table_meta(table, meta)
+            self._write_json(self._meta_file(table), meta)
 
     def _scan(self, table: str, files=None) -> DataFrame:
         """The one read of a stored table, under its recorded schema (no
@@ -632,13 +598,6 @@ class GraphStore:
         value collapses to one task -> one file per live partition
         directory); unpartitioned tables repartition to
         ``ceil(bytes / target_file_bytes)``."""
-        if table.endswith("__bucketed"):
-            raise ValueError(
-                f"{table!r} is a bucketed layout: its files carry bucket-id "
-                "naming the session catalog depends on, and a plain rewrite "
-                "would corrupt the zero-Exchange join contract — re-run "
-                "write_bucketed to compact it instead"
-            )
         path = self.path(table)
         before = self._parquet_files(path)
         bytes_before = sum(os.path.getsize(f) for f in before)

@@ -963,21 +963,6 @@ class MetadataModel:
 
     # -- DataFrame views (broadcast into joins) ------------------------------
 
-    def classes_df(self, spark: SparkSession) -> DataFrame:
-        rows = [
-            (c.label, c.short_label, c.data_type, c.derived, c.create)
-            for c in self.classes.values()
-        ]
-        return spark.createDataFrame(
-            rows, "label string, short_label string, data_type string, derived boolean, create boolean"
-        )
-
-    def relationships_df(self, spark: SparkSession) -> DataFrame:
-        rows = [(r.from_label, r.to_label, r.relationship_type, r.optional) for r in self.relationships]
-        return spark.createDataFrame(
-            rows, "from_label string, to_label string, relationship_type string, optional boolean"
-        )
-
     def terms_df(self, spark: SparkSession) -> DataFrame:
         rows = [(t.class_label, t.codelist_code, t.term_code, t.rdfs_label, t.order) for t in self.terms]
         return spark.createDataFrame(

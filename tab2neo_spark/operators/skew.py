@@ -22,17 +22,8 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def with_salt(df: DataFrame, buckets: int = 32, col_name: str = "_salt") -> DataFrame:
-    """Deterministic salt (hash of the whole row would break idempotent
-    dedup; a partition-local row index keeps it stable enough for
-    load-spreading while remaining cheap)."""
-    return df.withColumn(
-        col_name, F.pmod(F.monotonically_increasing_id(), F.lit(buckets)).cast("int")
-    )
 
 
 def salted_count_distinct(

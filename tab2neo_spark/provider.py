@@ -36,6 +36,7 @@ from typing import Any, Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tab2neo_spark.kg.canon import _union_find_driver
 from tab2neo_spark.model.metadata import MetadataModel, RelSpec
 
 OPTIONAL_MARK = "**"
@@ -57,23 +58,16 @@ def _strip_marks(label: str) -> tuple[str, bool, bool]:
 
 
 def _connected_groups(labels: list[str], rels: list[RelSpec]) -> list[set[str]]:
-    """Union-find over the label/rel graph (query_builder.py:357-389)."""
-    parent = {lb: lb for lb in labels}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in rels:
-        if r.from_label in parent and r.to_label in parent:
-            ra, rb = find(r.from_label), find(r.to_label)
-            if ra != rb:
-                parent[rb] = ra
+    """Union-find over the label/rel graph (query_builder.py:357-389);
+    groups come in the order of their first label."""
+    known = set(labels)
+    root = _union_find_driver(
+        [(r.from_label, r.to_label) for r in rels
+         if r.from_label in known and r.to_label in known]
+    )
     groups: dict[str, set[str]] = {}
     for lb in labels:
-        groups.setdefault(find(lb), set()).add(lb)
+        groups.setdefault(root.get(lb, lb), set()).add(lb)
     return list(groups.values())
 
 

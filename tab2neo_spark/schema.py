@@ -113,13 +113,5 @@ def node_id(class_label: str, *key_cols: Column | str) -> Column:
     return F.xxhash64(F.lit(class_label), *cols)
 
 
-def create_mode_id(class_label: str, row_salt: Column, *key_cols: Column | str) -> Column:
-    """Id for ``create``-mode classes (``Class.create=True`` in the
-    reference, model_appliers/model_applier.py:220-224): duplicates must NOT
-    merge, so the source-row identity is salted into the hash."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-    return F.xxhash64(F.lit(class_label), row_salt, *cols)
-
-
 def empty_df(spark, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame([], schema)

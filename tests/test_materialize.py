@@ -171,38 +171,6 @@ def test_assign_label_rollback(spark, tmp_path):
     assert {r["extra_label"] for r in kept.collect()} == {"Safety"}
 
 
-def test_bucketed_layout_zero_exchange_join(spark, tmp_path):
-    """PLANS.md §4b made executable: two tables bucketed on the same key
-    join with ZERO Exchange (broadcast and AQE disabled to isolate the
-    bucketing effect)."""
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    edges_a = spark.range(10000).select(
-        F.col("id").alias("src"), (F.col("id") % 97).alias("dst")
-    )
-    edges_b = spark.range(10000).select(
-        F.col("id").alias("src"), (F.col("id") % 89).alias("w")
-    )
-    ta = store.write_bucketed(edges_a, "ea", ["src"], n_buckets=8)
-    tb = store.write_bucketed(edges_b, "eb", ["src"], n_buckets=8)
-
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        joined = spark.table(ta).join(spark.table(tb), "src")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 10000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.sql(f"DROP TABLE IF EXISTS {ta}")
-        spark.sql(f"DROP TABLE IF EXISTS {tb}")
-
-
 def test_rollback_action_keeps_rows_without_action_column(spark, tmp_path):
     """Same run_id, same table, two writers: one batch has no _action
     column. rollback_action(run, 2) must delete ONLY (run, _action=2) rows
@@ -359,16 +327,6 @@ def test_graphstore_compaction(spark, tmp_path):
     assert len(recs) == 1 and recs[0]["table_compacted"] == "nodes"
 
 
-def test_compact_refuses_bucketed_layout(spark, tmp_path):
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    store.write_bucketed(df, "edges", ["k"], n_buckets=2)
-    with pytest.raises(ValueError, match="bucketed layout"):
-        store.compact("edges__bucketed")
-
-
 def test_compact_aborts_on_row_loss_and_keeps_original(spark, tmp_path, monkeypatch):
     from tab2neo_spark.kg import materialize as M
 
@@ -466,6 +424,29 @@ def test_rollback_action_flips_only_rewritten_tables_checkpoints(spark, tmp_path
     assert by_stage["m__a2_edges0"] == "rolled_back"
     assert by_stage["m__a2_nodes1"] == "done"
     assert store.stage_done("r1", "m__a2_nodes1")
+
+
+def test_checkpoints_and_rollback_keep_to_their_own_run(spark, tmp_path):
+    """Run ``r``'s checkpoint file names are a prefix of run
+    ``r__retry``'s. ``checkpoints("r")`` returns only run r's records,
+    and rolling r back leaves r__retry's checkpoint and rows alone."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+    for run_id, ids in (("r", [1, 2]), ("r__retry", [3])):
+        df = spark.createDataFrame([(i, "A", f"n{i}") for i in ids], schema)
+        store.write_stage(df, "nodes", run_id, "nodes", partition_by=["class"])
+    assert [c["run_id"] for c in store.checkpoints("r")] == ["r"]
+
+    retry_file = store._ckpt_file("r__retry", "nodes")
+    with open(retry_file) as f:
+        retry_before = f.read()
+    store.rollback_run("r", ["nodes"])
+    with open(retry_file) as f:
+        assert f.read() == retry_before
+    own = store.checkpoints("r")
+    assert [(c["run_id"], c["status"]) for c in own] == [("r", "rolled_back")]
+    assert store.stage_done("r__retry", "nodes")
+    assert {r["node_id"] for r in store.read("nodes").collect()} == {3}
 
 
 _JOB_GROUPS = itertools.count()

@@ -115,3 +115,27 @@ def test_ttl_export_deterministic():
     assert "t2s:Operator a owl:Class" in ttl1
     assert "t2s:Operator rdfs:subClassOf t2s:Entity ." in ttl1
     assert 'rdfs:label "MENTIONS"' in ttl1
+
+
+def test_ttl_terminator_without_space(spark):
+    """Legal Turtle puts the statement '.' directly after a prefixed
+    name; the tokenizer must not swallow it into the word (which would
+    desynchronize every following statement)."""
+    from tab2neo_spark.model.serialization import parse_ttl_graph
+
+    g = parse_ttl_graph(
+        """@prefix x: <urn:x#> .
+x:c a x:Method.
+x:c x:id "m".
+x:a0 a x:Method.
+x:a0 x:type "get_data".
+x:c x:METHOD_ACTION x:a0.
+"""
+    )
+    nodes = {n["id"]: n for n in g["nodes"]}
+    assert nodes["c"]["labels"] == ["Method"]
+    assert nodes["c"]["properties"] == {"id": "m"}
+    assert nodes["a0"]["properties"] == {"type": "get_data"}
+    assert [(r["fromId"], r["toId"], r["type"]) for r in g["relationships"]] == [
+        ("c", "a0", "METHOD_ACTION")
+    ]

@@ -101,3 +101,19 @@ def test_ivfpq_index_partition_pruned_and_vectorless(spark, tmp_path):
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cell" in m.group(1), plan
+
+
+def test_pq_ivf_topk_precomputed_centroids_equal(spark, sf_dir):
+    from tab2neo_spark.operators.pq import pq_ivf_topk, pq_train
+    from tab2neo_spark.operators.similarity import ivf_centroids
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cb = pq_train(emb, "embedding", "vec_id", m=4, k=4, sample=64, iters=2)
+    q = [0.1] * 64
+    inline = pq_ivf_topk(emb, "embedding", "vec_id", "label", q, cb, topk=5)
+    pre = ivf_centroids(emb, "embedding", "label").collect()
+    given = pq_ivf_topk(emb, "embedding", "vec_id", "label", q, cb, topk=5,
+                        centroids=pre)
+    assert [r.asDict() for r in inline.collect()] == [
+        r.asDict() for r in given.collect()
+    ]

@@ -553,3 +553,27 @@ def test_stream_dedup_within_watermark_late_arrival(spark, tmp_path):
     # signature state was evicted when the watermark passed
     assert len([i for i in ids if i in (1, 2)]) == 1
     assert 3 in ids and 4 in ids and 6 in ids and 5 in ids and len(ids) == 5
+
+
+def test_release_stop_and_timeout():
+    """release(stop=True) stops a continuous query before waiting;
+    timeout bounds the wait; unpersist always runs."""
+    from tab2neo_spark.streaming.neardup import release
+
+    calls = []
+
+    class FakeDF:
+        def unpersist(self):
+            calls.append("unpersist")
+
+    class FakeQuery:
+        bench_digests = FakeDF()
+
+        def stop(self):
+            calls.append("stop")
+
+        def awaitTermination(self, timeout=None):
+            calls.append(("await", timeout))
+
+    release(FakeQuery(), stop=True, timeout=5)
+    assert calls == ["stop", ("await", 5), "unpersist"]

@@ -9,6 +9,9 @@ from __future__ import annotations
 
 import pytest
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from tab2neo_spark.pipeline.runner import DerivationMethod
 
 
@@ -128,3 +131,73 @@ def test_method_from_name_ttl_fallback(spark, test_data, tmp_path):
     with pytest.raises(FileNotFoundError):
         DerivationMethod.from_name(spark, "nope", str(tmp_path),
                                    source_df=test_data)
+
+
+_KEY = st.from_regex(r"[a-z][a-z0-9_]{0,9}", fullmatch=True)
+
+
+_SCALAR = st.one_of(
+    st.integers(-(2**31), 2**31 - 1),
+    st.floats(allow_nan=False, allow_infinity=False, width=64),
+    st.booleans(),
+    st.text(alphabet=st.characters(blacklist_categories=("Cs", "Cc")),
+            max_size=20),
+    st.text(alphabet='"\\\n\t #;,.<>', max_size=8),  # escaping stress
+)
+
+
+_PARAM = st.one_of(
+    _SCALAR,
+    st.lists(_SCALAR, max_size=3),
+    st.dictionaries(_KEY, _SCALAR, max_size=3),
+)
+
+
+@st.composite
+def _methods(draw):
+    n = draw(st.integers(min_value=1, max_value=4))
+    actions = []
+    for _ in range(n):
+        a = {"type": "get_data"}
+        for k in draw(st.lists(_KEY, max_size=3, unique=True)):
+            # 'id' == type is the reference's display form from_ttl strips
+            if k not in ("type", "id"):
+                a[k] = draw(_PARAM)
+        actions.append(a)
+    return {"name": draw(_KEY), "actions": actions}
+
+
+@settings(max_examples=30, deadline=None)
+@given(_methods())
+def test_ttl_method_roundtrip_property(spark, spec):
+    from tab2neo_spark.pipeline.runner import DerivationMethod
+
+    td = spark.createDataFrame([("S1", 1)], "Subject string, Age int")
+    m = DerivationMethod(spark, spec, source_df=td)
+    m2 = DerivationMethod.from_ttl(spark, m.to_ttl(), source_df=td)
+    assert m2.name == m.name
+    assert m2.actions == m.actions
+
+
+def test_ttl_genuine_id_param_survives(spark):
+    """from_ttl strips only the reference's display pattern
+    (id == type); an action's real 'id' parameter round-trips."""
+    from tab2neo_spark.pipeline.runner import DerivationMethod
+
+    td = spark.createDataFrame([("S1", 1)], "Subject string, Age int")
+    spec = {
+        "name": "keep_id",
+        "actions": [
+            {"type": "get_data", "id": "my-param"},
+        ],
+    }
+    m = DerivationMethod(spark, spec, source_df=td)
+    m2 = DerivationMethod.from_ttl(spark, m.to_ttl(), source_df=td)
+    assert m2.actions == [{"type": "get_data", "id": "my-param"}]
+    # the reference display form (id == type) is still stripped
+    ref = """@prefix x: <urn:x#> .
+x:c a x:Method ; x:id "m" ; x:METHOD_ACTION x:a0 .
+x:a0 a x:Method ; x:type "get_data" ; x:id "get_data" .
+"""
+    m3 = DerivationMethod.from_ttl(spark, ref, source_df=td)
+    assert m3.actions == [{"type": "get_data"}]

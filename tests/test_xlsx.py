@@ -11,6 +11,9 @@ import zipfile
 import pandas as pd
 import pytest
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from tab2neo_spark.sources.xlsx import read_xlsx, write_xlsx
 
 
@@ -103,3 +106,175 @@ def test_xlsx_live_loader_path(spark, tmp_path):
     assert read_file(
         spark, str(tmp_path), "test.xlsx", metadataonly=True
     ).count() == 0
+
+
+_NAME = st.text(
+    alphabet=st.characters(
+        blacklist_categories=("Cs", "Cc"), blacklist_characters="\r\n\t"
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+@st.composite
+def _xlsx_frames(draw):
+    n_rows = draw(st.integers(min_value=1, max_value=6))
+    names = draw(
+        st.lists(_NAME, min_size=1, max_size=4, unique=True)
+    )
+    cols = {}
+    for name in names:
+        kind = draw(st.sampled_from(["int", "float", "str", "bool"]))
+        if kind == "int":
+            vals = draw(st.lists(st.integers(-(2**53), 2**53),
+                                 min_size=n_rows, max_size=n_rows))
+        elif kind == "float":
+            vals = draw(st.lists(
+                st.floats(allow_nan=False, allow_infinity=False, width=64),
+                min_size=n_rows, max_size=n_rows))
+        elif kind == "bool":
+            vals = draw(st.lists(st.booleans(),
+                                 min_size=n_rows, max_size=n_rows))
+        else:
+            vals = draw(st.lists(
+                st.text(alphabet=st.characters(
+                    blacklist_categories=("Cs", "Cc")), max_size=20),
+                min_size=n_rows, max_size=n_rows))
+        cols[name] = vals
+    return pd.DataFrame(cols)
+
+
+@settings(max_examples=40, deadline=None)
+@given(_xlsx_frames())
+def test_xlsx_roundtrip_property(tmp_path_factory, df):
+    from tab2neo_spark.sources.xlsx import read_xlsx, write_xlsx
+
+    p = str(tmp_path_factory.mktemp("xl") / "t.xlsx")
+    write_xlsx(p, {"S": df})
+    got = read_xlsx(p)
+    assert list(got.columns) == [str(c) for c in df.columns]
+    for c in df.columns:
+        exp = df[c].tolist()
+        act = got[c].tolist()
+        for e, a in zip(exp, act):
+            if isinstance(e, bool):
+                assert a is True or a is False
+                assert a == e
+            elif isinstance(e, str):
+                # every string (incl. '') round-trips via shared strings
+                assert a == e
+            elif isinstance(e, int):
+                assert int(a) == e
+            else:
+                assert a == e or abs(a - e) < 1e-9 * max(1.0, abs(e))
+
+
+def test_xlsx_homogeneous_numeric_frames(tmp_path):
+    """iterrows over a homogeneous-dtype frame yields numpy scalars
+    (np.int64 / np.bool_), which are NOT instances of int/bool — the
+    writer must unbox them or whole-int columns round-trip as text."""
+    p = str(tmp_path / "h.xlsx")
+    ints = pd.DataFrame({"a": [1, 2, 3]})
+    write_xlsx(p, {"S": ints})
+    got = read_xlsx(p)
+    assert got["a"].dtype == "int64" and got["a"].tolist() == [1, 2, 3]
+
+    bools = pd.DataFrame({"b": [True, False, True]})
+    write_xlsx(p, {"S": bools})
+    got = read_xlsx(p)
+    assert got["b"].tolist() == [True, False, True]
+    assert got["b"].dtype == bool
+
+    floats = pd.DataFrame({"f": [1.5, 2.5]})
+    write_xlsx(p, {"S": floats})
+    assert read_xlsx(p)["f"].tolist() == [1.5, 2.5]
+
+
+def test_xlsx_duplicate_headers_and_ragged_rows(tmp_path):
+    """Two columns headed 'id' dedup pandas-style ('id', 'id.1') with
+    BOTH columns' data intact; a data row wider than the header keeps its
+    extra cell under an Unnamed column."""
+    import zipfile
+
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    sheet = f"""<?xml version="1.0"?>
+<worksheet xmlns="{ns}"><sheetData>
+<row r="1"><c r="A1" t="inlineStr"><is><t>id</t></is></c>
+  <c r="B1" t="inlineStr"><is><t>id</t></is></c></row>
+<row r="2"><c r="A2"><v>1</v></c><c r="B2"><v>2</v></c><c r="C2"><v>9</v></c></row>
+</sheetData></worksheet>"""
+    wb = (
+        f'<workbook xmlns="{ns}" xmlns:r='
+        '"http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
+        '<sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>'
+    )
+    rels = (
+        '<Relationships xmlns='
+        '"http://schemas.openxmlformats.org/package/2006/relationships">'
+        '<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/>'
+        "</Relationships>"
+    )
+    p = str(tmp_path / "dup.xlsx")
+    with zipfile.ZipFile(p, "w") as zf:
+        zf.writestr("xl/workbook.xml", wb)
+        zf.writestr("xl/_rels/workbook.xml.rels", rels)
+        zf.writestr("xl/worksheets/sheet1.xml", sheet)
+    df = read_xlsx(p)
+    assert list(df.columns) == ["id", "id.1", "Unnamed: 2"]
+    assert df["id"].tolist() == [1] and df["id.1"].tolist() == [2]
+    assert df["Unnamed: 2"].tolist() == [9]
+
+
+def _book(tmp_path, sheet_xml: str) -> str:
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    wb = (
+        f'<workbook xmlns="{ns}" xmlns:r='
+        '"http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
+        '<sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>'
+    )
+    rels = (
+        '<Relationships xmlns='
+        '"http://schemas.openxmlformats.org/package/2006/relationships">'
+        '<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/>'
+        "</Relationships>"
+    )
+    path = str(tmp_path / "gap.xlsx")
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("xl/workbook.xml", wb)
+        zf.writestr("xl/_rels/workbook.xml.rels", rels)
+        zf.writestr("xl/worksheets/sheet1.xml", sheet_xml)
+    return path
+
+
+def test_xlsx_interior_blank_rows_keep_alignment(tmp_path):
+    from tab2neo_spark.sources.xlsx import read_xlsx
+
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    sheet = f"""<?xml version="1.0"?>
+<worksheet xmlns="{ns}"><sheetData>
+<row r="1"><c r="A1" t="inlineStr"><is><t>k</t></is></c></row>
+<row r="2"><c r="A2"><v>1</v></c></row>
+<row r="5"><c r="A5"><v>4</v></c></row>
+</sheetData></worksheet>"""
+    df = read_xlsx(_book(tmp_path, sheet))
+    # rows 3 and 4 were omitted by the writer -> two all-NaN rows keep
+    # row 5's value at frame position 3 (pandas/openpyxl parity)
+    assert list(df.columns) == ["k"]
+    assert len(df) == 4
+    assert df["k"][0] == 1 and pd.isna(df["k"][1]) and pd.isna(df["k"][2])
+    assert df["k"][3] == 4
+
+
+def test_xlsx_rows_without_r_still_sequential(tmp_path):
+    from tab2neo_spark.sources.xlsx import read_xlsx
+
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    sheet = f"""<?xml version="1.0"?>
+<worksheet xmlns="{ns}"><sheetData>
+<row><c t="inlineStr"><is><t>k</t></is></c></row>
+<row><c><v>1</v></c></row>
+<row><c><v>2</v></c></row>
+</sheetData></worksheet>"""
+    df = read_xlsx(_book(tmp_path, sheet))
+    assert df["k"].tolist() == [1, 2]
