@@ -1,10 +1,10 @@
-"""Graph materialization: partitioned tables + lineage + idempotent resume.
+"""Graph materialization: partitioned tables, one commit log, idempotent resume.
 
 Replaces the reference's Cypher MERGE ingestion and its ``Changes`` audit
 nodes (derivation_method/action.py:156-175; rollback
 derivation_method.py:596-671).  The north rule requires: every stage
-writes per-partition lineage + row-count metrics to a checkpoint table so
-runs resume idempotently at 10^12-document scale.
+writes per-partition lineage + row-count metrics so runs resume
+idempotently at 10^12-document scale.
 
 Design:
 
@@ -13,28 +13,37 @@ Design:
   readback layer's class/rel filters directly (``_LAYOUT`` states each
   table's partition columns and dedup key once). Plain parquet only; an
   Iceberg deployment would replace the anti-join with MERGE INTO and the
-  rollback's file deletes with a snapshot rollback.
+  log with its snapshots.
 - **Idempotency**: all ids are deterministic content hashes, so re-writing
   the same input produces byte-identical rows; dedup-on-write
   (anti-join against the existing table) replaces transactional MERGE.
   The anti-join reads only the partitions the batch can touch, taken from
   the batch's plan constraints where they bound them (no job).
-- **Lineage**: one checkpoint row per (run_id, stage) with row counts +
-  per-partition row histogram; a stage found 'done' in the checkpoint
-  table is skipped on resume — re-running a crashed job re-does only the
-  missing stages.
-- **Schema**: ``<table>__meta.json`` records the partition columns and
-  the union of every column ever written (partition columns last), so
-  every read is ``spark.read.schema(recorded)`` — no inference job, and
-  columns an older file lacks read as NULL.
+- **Commit log**: the store's state is ONE append-only log,
+  ``<root>/_log/<version>.json``, as in Delta Lake. A version holds
+  ``add``/``remove`` file actions (an added file with its table, rows,
+  bytes and the ``(run, stage, _action)`` tags of the writes whose rows it
+  holds), the partitioning and schema of the tables it changes (the union
+  of every column ever written, partition columns last), and the stage
+  records it adds or rolls back. Every call — a stage write, a rollback
+  over several tables, a compaction — is one version, claimed whole
+  (temp file, then ``os.link``), so it lands entirely or not at all.
+- **Files**: new files are written to ``<root>/_staging`` and moved into
+  their table after the commit; removed files are deleted after it. So
+  whenever a call has returned, a table directory holds exactly its live
+  files, and reads list the directory under the recorded schema (no
+  inference job, and no listing job, which an explicit list of more than
+  32 files would run). Opening a store finishes the last commit, drops
+  the staging area and deletes table files no version references: a
+  process killed anywhere leaves the store as of its last commit.
 - **Rollback/compaction**: every row carries ``run_id`` (and ``_action``
-  when written by :func:`write_method_result`), and every file
-  ``write_stage`` appends holds one run (and one action). Rollback sorts
-  files by their parquet footer statistics, with no data scan: it deletes
-  the files holding only the dropped rows, leaves the files holding none
-  of them, and rewrites only the mixed ones (the copy-on-write DELETE of
-  Delta Lake). Mixed files and compaction go through ONE rewrite
-  (:meth:`GraphStore._rewrite`).
+  when written by :func:`write_method_result`). Rollback deletes the
+  files whose tags all match, keeps those no tag matches, and rewrites
+  only the mixed ones, which :meth:`GraphStore.compact` makes (a merged
+  file carries the tags of every file it merged). Mixed files and
+  compaction go through ONE rewrite (:meth:`GraphStore._rewrite`).
+- **Single writer**: one process, through one ``GraphStore``, mutates a
+  store at a time; a second writer fails to claim a version.
 """
 
 from __future__ import annotations
@@ -48,7 +57,8 @@ import time
 from contextlib import suppress
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -126,72 +136,130 @@ def _constrained_values(df: DataFrame, cols: list[str]) -> dict[str, set[str]] |
 
 
 class GraphStore:
-    """Filesystem-rooted node/edge/triple store with a checkpoint table."""
+    """Filesystem-rooted node/edge/triple store with one commit log."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        os.makedirs(self.root, exist_ok=True)
+        # new files wait here, one directory per table, for their commit
+        self._staging = f"{self.root}/_staging"
+        os.makedirs(f"{self.root}/_log", exist_ok=True)
+        # the replayed log: table -> layout, table -> {path: add action},
+        # (run_id, stage) -> (version, record)
+        self._tables: dict[str, dict] = {}
+        self._files: dict[str, dict[str, dict]] = {}
+        self._stages: dict[tuple[str, str], tuple[int, dict]] = {}
+        self._version = -1
+        last = {}
+        while os.path.exists(self._log_file(self._version + 1)):
+            with open(self._log_file(self._version + 1)) as f:
+                last = json.load(f)
+            self._apply(last)
+        self._recover(last)
 
     # -- paths ---------------------------------------------------------------
 
     def path(self, table: str) -> str:
         return f"{self.root}/{table}"
 
-    def _ckpt_dir(self) -> str:
-        return f"{self.root}/_checkpoint"
+    def _log_file(self, version: int) -> str:
+        return f"{self.root}/_log/{version:020d}.json"
+
+    # -- the log ---------------------------------------------------------------
+
+    def _apply(self, commit: dict) -> None:
+        """Replay one version into the in-memory state."""
+        self._version += 1
+        self._tables.update(commit.get("tables", {}))
+        for a in commit.get("remove", []):
+            del self._files[a["table"]][a["path"]]
+        for a in commit.get("add", []):
+            self._files.setdefault(a["table"], {})[a["path"]] = a
+        for rec in commit.get("stages", []):
+            self._stages[(rec["run_id"], rec["stage"])] = (self._version, rec)
+        for run_id, stage in commit.get("rolled_back", []):
+            v, rec = self._stages[(run_id, stage)]
+            self._stages[(run_id, stage)] = (v, {**rec, "status": "rolled_back"})
+
+    def _commit(self, commit: dict) -> None:
+        """Claim the next version for ``commit``, then make the table
+        directories match it. The version is written to a temp file and
+        hard-linked into place, so it appears whole or not at all, and a
+        version another writer took fails the link."""
+        version = self._version + 1
+        tmp = f"{self.root}/_log/.{version}.json.tmp"
+        with open(tmp, "w") as f:
+            json.dump(commit, f)
+        try:
+            os.link(tmp, self._log_file(version))
+        except FileExistsError:
+            raise RuntimeError(
+                f"log version {version} of {self.root!r} was committed by another "
+                "writer; a store takes one writer at a time"
+            ) from None
+        finally:
+            os.remove(tmp)
+        self._apply(commit)
+        self._finish(commit)
+
+    def _finish(self, commit: dict) -> None:
+        """Move a commit's staged files into their tables, then delete the
+        files it removed and drop the staging area. Every step can be
+        repeated, so recovery re-runs it after a kill."""
+        for t in commit.get("tables", {}):
+            os.makedirs(self.path(t), exist_ok=True)
+        for a in commit.get("add", []):
+            src = f"{self._staging}/{a['table']}/{a['path']}"
+            dst = f"{self.path(a['table'])}/{a['path']}"
+            if os.path.exists(src):
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(src, dst)
+                with suppress(FileNotFoundError):
+                    os.replace(self._crc(src), self._crc(dst))
+        for a in commit.get("remove", []):
+            self._delete_files(a["table"], [f"{self.path(a['table'])}/{a['path']}"])
+        shutil.rmtree(self._staging, ignore_errors=True)
+
+    def _recover(self, last: dict) -> None:
+        """Finish the last commit (a kill may have stopped it half way), drop
+        what was staged for a commit that never happened, and delete table
+        files no version references."""
+        self._finish(last)
+        for table in self._tables:
+            live, root = self._files.get(table, {}), self.path(table)
+            stray = []
+            for dirpath, _, names in os.walk(root):
+                for name in names:
+                    rel = os.path.relpath(os.path.join(dirpath, name), root)
+                    owner = rel
+                    if name.startswith(".") and name.endswith(".crc"):
+                        owner = os.path.join(os.path.dirname(rel), name[1:-4])
+                    if owner not in live:
+                        stray.append(os.path.join(root, rel))
+            self._delete_files(table, stray)
+
+    def _staged(self, table: str) -> dict[str, tuple[int, int]]:
+        """{path in the table: (rows, bytes)} of the files staged for
+        ``table``, rows from the parquet footers (no data scan). Empty
+        files are left out: they are never moved in."""
+        root, out = f"{self._staging}/{table}", {}
+        for dirpath, _, names in os.walk(root):
+            for name in names:
+                f = os.path.join(dirpath, name)
+                if name.endswith(".parquet") and (rows := pq.read_metadata(f).num_rows):
+                    out[os.path.relpath(f, root)] = (rows, os.path.getsize(f))
+        return out
 
     # -- checkpoint / lineage --------------------------------------------------
 
     def stage_done(self, run_id: str, stage: str) -> bool:
-        rec = self._read_ckpt(run_id, stage)
-        return rec is not None and rec.get("status") == "done"
-
-    def _ckpt_file(self, run_id: str, stage: str) -> str:
-        return f"{self._ckpt_dir()}/{run_id}__{stage}.json"
-
-    def _read_ckpt(self, run_id: str, stage: str) -> dict | None:
-        p = self._ckpt_file(run_id, stage)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    @staticmethod
-    def _write_json(path: str, obj: dict) -> None:
-        """Write ``obj`` to a temp file and rename it over ``path``, so a
-        reader sees the old record or the new one, never a partial one."""
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, path)
-
-    def write_checkpoint(self, run_id: str, stage: str, payload: dict) -> None:
-        """Atomic (write-temp + rename) local checkpoint record; on a real
-        cluster this is an Iceberg/Delta append to a checkpoint table —
-        both give the same all-or-nothing visibility."""
-        os.makedirs(self._ckpt_dir(), exist_ok=True)
-        self._write_json(self._ckpt_file(run_id, stage), payload)
+        _, rec = self._stages.get((run_id, stage), (None, {}))
+        return rec.get("status") == "done"
 
     def checkpoints(self, run_id: str | None = None) -> list[dict]:
-        """Checkpoint records, all of them or only ``run_id``'s. The file
-        name prefix only narrows the reads: run ``r``'s prefix also names
-        run ``r__retry``'s files, so a record belongs to the run it
-        states."""
-        out = []
-        d = self._ckpt_dir()
-        if not os.path.isdir(d):
-            return out
-        for fn in sorted(os.listdir(d)):
-            if not fn.endswith(".json"):
-                continue
-            if run_id and not fn.startswith(f"{run_id}__"):
-                continue
-            with open(f"{d}/{fn}") as f:
-                rec = json.load(f)
-            if not run_id or rec.get("run_id") == run_id:
-                out.append(rec)
-        return out
+        """Stage records in commit order, all of them or only ``run_id``'s."""
+        return [dict(rec) for (run, _), (_, rec) in self._stages.items()
+                if run_id is None or run == run_id]
 
     # -- writes ----------------------------------------------------------------
 
@@ -204,64 +272,73 @@ class GraphStore:
         partition_by: list[str] | None = None,
         dedup_key: list[str] | None = None,
     ) -> dict:
-        """Write one stage's output with lineage; skip if already done.
+        """Write one stage's output with lineage as one commit; skip if
+        already done.
 
-        Returns the checkpoint payload. ``dedup_key`` turns the append into
+        Returns the stage record. ``dedup_key`` turns the append into
         an idempotent keyed upsert (left-anti against existing keys — the
         MERGE INTO analog without Iceberg).
         """
         if self.stage_done(run_id, stage):
-            return self._read_ckpt(run_id, stage)
+            return dict(self._stages[(run_id, stage)][1])
 
         t0 = time.time()
         out = df.withColumn("run_id", F.lit(run_id))
-        path = self.path(table)
-        # recorded BEFORE the write: a schema naming a column no file holds
-        # yet is harmless (it reads as NULL); a file holding a column the
-        # schema lacks would hide it
-        self._record_schema(table, partition_by or [], out.schema)
+        layout = self._widened(table, partition_by or [], out.schema)
         n_pruned: int | None = None
 
-        if dedup_key and os.path.isdir(path):
-            existing, n_pruned = self._existing_for_dedup(path, out, partition_by)
+        if dedup_key and table in self._tables:
+            existing, n_pruned = self._existing_for_dedup(self.path(table), out, partition_by)
             # no distinct() on the existing keys: an anti-join's result does
             # not depend on duplicates on its right side
             out = out.join(existing.select(*dedup_key), dedup_key, "left_anti")
 
-        # lineage WITHOUT a second pass: the row count rides on the write
-        # itself via df.observe (one job, one scan — a pre-write
+        # lineage WITHOUT a second pass: the row count (and the ``_action``
+        # values a rollback matches files by) ride on the write itself via
+        # df.observe (one job, one scan — a pre-write
         # groupBy().count().collect() would execute the full stage DAG
         # twice, doubling the most expensive jobs at scale), and the
         # per-file histogram comes from the written parquet FOOTERS
         # (metadata-only — Iceberg deployments read the same numbers from
         # snapshot manifests)
-        from pyspark.sql import Observation
-
-        before_files = self._parquet_files(path)
         obs = Observation(f"{run_id}__{stage}")
-        out = out.observe(obs, F.count(F.lit(1)).alias("row_count"))
+        metrics = [F.count(F.lit(1)).alias("row_count")]
+        if "_action" in out.columns:
+            metrics += [F.min("_action").alias("lo"), F.max("_action").alias("hi"),
+                        F.count("_action").alias("acted")]
+        out = out.observe(obs, *metrics)
 
-        writer = out.write.mode("append")
+        writer = out.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        writer.parquet(f"{self._staging}/{table}")
 
-        row_count = obs.get["row_count"]
-        hist = self._footer_histogram(self._parquet_files(path) - before_files)
-
+        m = obs.get
+        row_count = m["row_count"]
+        # the rows' one action, None when no row has one, "*" when several
+        action = None
+        if m.get("acted"):
+            action = m["lo"] if m["lo"] == m["hi"] and m["acted"] == row_count else "*"
+        staged = self._staged(table)
         payload = {
             "run_id": run_id,
             "stage": stage,
             "table": table,
             "row_count": row_count,
-            "partitions": hist,
+            "partitions": {f"{table}/{p}": rows for p, (rows, _) in staged.items()},
             "dedup_scan_partitions": n_pruned,
             "wall_s": round(time.time() - t0, 3),
             "status": "done",
             "ts": time.time(),
         }
-        self.write_checkpoint(run_id, stage, payload)
-        return payload
+        tags = [[run_id, stage, action]]
+        self._commit({
+            "tables": {table: layout} if layout != self._tables.get(table) else {},
+            "add": [{"table": table, "path": p, "rows": rows, "bytes": size, "tags": tags}
+                    for p, (rows, size) in staged.items()],
+            "stages": [payload],
+        })
+        return dict(payload)
 
     def _existing_for_dedup(
         self, path: str, batch, partition_by: list[str] | None
@@ -315,110 +392,58 @@ class GraphStore:
             return existing.filter(F.lit(False)), 0
         return existing.filter(pred), len(values)
 
-    @staticmethod
-    def _parquet_files(path: str) -> set[str]:
-        out: set[str] = set()
-        if not os.path.isdir(path):
-            return out
-        for dirpath, _, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    out.add(os.path.join(dirpath, fn))
-        return out
-
-    def _footer_histogram(self, files: set[str]) -> dict[str, int]:
-        """Per-output-file row counts from parquet footer metadata — no
-        data scan; the driver reads a few KB per file."""
-        import pyarrow.parquet as pq
-
-        hist: dict[str, int] = {}
-        for f in sorted(files):
-            rel = os.path.relpath(f, self.root)
-            hist[rel] = pq.ParquetFile(f).metadata.num_rows
-        return hist
-
     def read(self, table: str, as_of_run: str | None = None) -> DataFrame:
-        """Read a table, optionally AS OF a run — the Iceberg
-        time-travel analog over this store's checkpoint lineage: the
-        visible rows are those of surviving runs whose last commit on
-        this table happened at or before ``as_of_run``'s last commit
-        (checkpoint ``ts``). The visible-run set is metadata-scale, so
-        it renders as an ``isin`` literal the scan filters on.
+        """Read a table, optionally AS OF a run — the Iceberg time-travel
+        analog over the log: the visible rows are those of surviving runs
+        whose last commit on this table is at or before ``as_of_run``'s
+        last commit, in log order. The visible-run set is metadata-scale,
+        so it renders as an ``isin`` literal the scan filters on.
 
-        Divergence from real Iceberg (documented, inherent to plain
-        parquet): a ROLLED-BACK run's files are physically deleted or
-        rewritten, so time travel sees append history only — it cannot
-        resurrect rows a rollback removed; Iceberg's snapshot manifests
-        can."""
+        Divergence from real Iceberg (documented): a table directory holds
+        only live files, so a ROLLED-BACK run's rows are gone and time
+        travel sees append history only; Iceberg's snapshot manifests keep
+        the removed files readable."""
         df = self._scan(table)
         if as_of_run is None:
             return df
-        commit_ts: dict[str, float] = {}
-        for rec in self.checkpoints():
-            if rec.get("table") == table and rec.get("status") == "done":
-                rid = rec["run_id"]
-                commit_ts[rid] = max(commit_ts.get(rid, 0.0), rec.get("ts", 0.0))
-        if as_of_run not in commit_ts:
+        last: dict[str, int] = {}
+        for (run, _), (version, rec) in self._stages.items():
+            if rec.get("table") == table and rec["status"] == "done":
+                last[run] = max(last.get(run, -1), version)
+        if as_of_run not in last:
             raise ValueError(
                 f"run {as_of_run!r} has no surviving commit on table {table!r}"
             )
-        cutoff = commit_ts[as_of_run]
-        visible = sorted(r for r, t in commit_ts.items() if t <= cutoff)
+        visible = sorted(r for r, v in last.items() if v <= last[as_of_run])
         return df.filter(F.col("run_id").isin(visible))
 
-    # -- table metadata (partition layout + recorded schema) -------------------
-
-    def _meta_file(self, table: str) -> str:
-        return f"{self.root}/{table}__meta.json"
-
-    def _table_meta(self, table: str) -> dict:
-        try:
-            with open(self._meta_file(table)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+    # -- table layout (partitioning + recorded schema) -------------------------
 
     def table_partitioning(self, table: str) -> list[str]:
-        return self._table_meta(table).get("partition_by", [])
+        return self._tables.get(table, {}).get("partition_by", [])
 
-    def _schema(self, table: str) -> StructType:
-        """The recorded schema. A table without one (raw parquet, or a
-        store that predates recorded schemas) is inferred once, merging
-        every footer, and recorded."""
-        meta = self._table_meta(table)
-        if "schema" not in meta:
-            merged = self.spark.read.option("mergeSchema", "true").parquet(self.path(table))
-            meta["schema"] = merged.schema.jsonValue()
-            self._write_json(self._meta_file(table), meta)
-        return StructType.fromJson(meta["schema"])
-
-    def _record_schema(
-        self, table: str, partition_by: list[str], schema: StructType
-    ) -> None:
-        """Widen the recorded schema by ``schema``'s new columns, on the
-        driver (no job once a schema is recorded). The first write's
-        ``partition_by`` is the table's; partition columns stay last, where
-        a partitioned read puts them."""
-        old = self._table_meta(table)
-        fields = {}
-        if "schema" in old or os.path.isdir(self.path(table)):
-            fields = {f.name: f for f in self._schema(table).fields}
+    def _widened(self, table: str, partition_by: list[str], schema: StructType) -> dict:
+        """``table``'s layout with ``schema``'s new columns added, on the
+        driver (no job). The first write's ``partition_by`` is the table's;
+        partition columns stay last, where a partitioned read puts them."""
+        old = self._tables.get(table, {"partition_by": partition_by, "schema": {"fields": []}})
+        fields = {f.name: f for f in StructType.fromJson(old["schema"]).fields}
         for f in schema.fields:
             fields.setdefault(f.name, f)
-        parts = old.get("partition_by", partition_by)
+        parts = old["partition_by"]
         merged = StructType(
             [f for name, f in fields.items() if name not in parts]
             + [fields[p] for p in parts if p in fields]
         )
-        meta = {"partition_by": parts, "schema": merged.jsonValue()}
-        if meta != old:
-            self._write_json(self._meta_file(table), meta)
+        return {"partition_by": parts, "schema": merged.jsonValue()}
 
     def _scan(self, table: str, files=None) -> DataFrame:
         """The one read of a stored table, under its recorded schema (no
         inference job). ``files`` restricts it to those parquet files;
         ``basePath`` keeps their partition values."""
-        reader = self.spark.read.schema(self._schema(table))
+        if table not in self._tables:
+            raise ValueError(f"store {self.root!r} has no table {table!r}")
+        reader = self.spark.read.schema(StructType.fromJson(self._tables[table]["schema"]))
         if files is None:
             return reader.parquet(self.path(table))
         return reader.option("basePath", self.path(table)).parquet(*sorted(files))
@@ -436,62 +461,44 @@ class GraphStore:
         partition directory this leaves empty (never the table's own)."""
         root = self.path(table)
         for f in files:
-            os.remove(f)
-            with suppress(FileNotFoundError):
-                os.remove(self._crc(f))
+            for g in (f, self._crc(f)):
+                with suppress(FileNotFoundError):
+                    os.remove(g)
             d = os.path.dirname(f)
-            while len(d) > len(root) and not os.listdir(d):
+            while len(d) > len(root) and os.path.isdir(d) and not os.listdir(d):
                 os.rmdir(d)
                 d = os.path.dirname(d)
 
-    def _rewrite(
-        self, table: str, files, transform, tag: str, expect_rows: int | None = None
-    ) -> None:
-        """The one rewrite of stored files: ``transform`` the rows of
-        ``files``, write them to ``<table>__<tag>_tmp`` with the table's
-        recorded partitioning, move the new files into the table, then
-        delete ``files``. Files outside ``files`` are never touched.
-
-        ``expect_rows`` checks the rewrite's footer row count before
-        anything in the table changes (r5 ADVICE): a row-losing rewrite
-        aborts with the table intact. Every mutation assumes a single
-        writer. A crash after the move and before the delete leaves the
-        kept rows twice."""
-        path = self.path(table)
-        tmp = f"{path}__{tag}_tmp"
+    def _rewrite(self, table: str, paths, transform, dropped=lambda tag: False) -> list[dict]:
+        """The one rewrite of stored files: ``transform`` the rows of the
+        table's files ``paths`` and stage them with the table's recorded
+        partitioning, for the next commit. Returns the staged files' add
+        actions. A new file takes the tags of the files it was rewritten
+        from in its partition directory, less the ``dropped`` ones (tags
+        whose rows ``transform`` removes)."""
+        files = [f"{self.path(table)}/{p}" for p in paths]
         writer = transform(self._scan(table, files)).write.mode("overwrite")
         parts = self.table_partitioning(table)
         if parts:
             writer = writer.partitionBy(*parts)
-        writer.parquet(tmp)
-        new = self._parquet_files(tmp)
-        if expect_rows is not None:
-            rows_tmp = sum(self._footer_histogram(new).values())
-            if rows_tmp != expect_rows:
-                shutil.rmtree(tmp)
-                raise RuntimeError(
-                    f"{tag}({table!r}): rewrite holds {rows_tmp} rows but the "
-                    f"source held {expect_rows} — aborting before the swap "
-                    "(concurrent append, or a row-dropping read?); original "
-                    "directory left untouched"
-                )
-        for f in new:
-            dst = os.path.join(path, os.path.relpath(f, tmp))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(f, dst)
-            with suppress(FileNotFoundError):
-                os.replace(self._crc(f), self._crc(dst))
-        shutil.rmtree(tmp)
-        self._delete_files(table, files)
+        writer.parquet(f"{self._staging}/{table}")
+        tags: dict[str, dict] = {}
+        for p in paths:
+            for tag in self._files[table][p]["tags"]:
+                if not dropped(tag):
+                    tags.setdefault(os.path.dirname(p), {})[json.dumps(tag)] = tag
+        return [{"table": table, "path": p, "rows": rows, "bytes": size,
+                 "tags": list(tags.get(os.path.dirname(p), {}).values())}
+                for p, (rows, size) in self._staged(table).items()]
 
     # -- rollback ----------------------------------------------------------------
 
     def rollback_run(self, run_id: str, tables: list[str]) -> None:
-        """Delete a run's rows from each table and mark its checkpoints
-        rolled back. Files holding only the run's rows are deleted, files
-        holding none are left alone, and only mixed files (after
-        :meth:`compact`) are rewritten — so rolling back a run that was not
-        compacted since runs no Spark job."""
+        """Delete a run's rows from each table and mark its stage records
+        rolled back, in one commit. Files holding only the run's rows are
+        deleted, files holding none are left alone, and only mixed files
+        (after :meth:`compact`) are rewritten — so rolling back a run that
+        was not compacted since runs no Spark job."""
         self._rollback(run_id, tables)
 
     def rollback_action(self, run_id: str, action_idx: int, tables: list[str]) -> None:
@@ -516,92 +523,63 @@ class GraphStore:
         for col, value in match.items():
             drop = drop & F.coalesce(F.col(col) == value, F.lit(False))
 
-        changed = set()
-        for t in tables:
-            path = self.path(t)
-            verdict = {f: self._footer_match(path, f, match)
-                       for f in self._parquet_files(path)}
-            mixed = [f for f, v in verdict.items() if v == "some"]
+        def verdict(tag) -> str:
+            """Whether a tag's rows all match, none do, or some may."""
+            run, _, action = tag
+            if run != run_id:
+                return "none"
+            if action_idx is None or action == action_idx:
+                return "all"
+            return "some" if action == "*" else "none"
+
+        add, remove, changed = [], [], set()
+        for t in dict.fromkeys(tables):  # a table named twice is removed from once
+            mixed = []
+            for p, f in self._files.get(t, {}).items():
+                seen = {verdict(tag) for tag in f["tags"]}
+                if seen != {"none"}:
+                    remove.append({"table": t, "path": p})
+                    changed.add(t)
+                    if seen != {"all"}:
+                        mixed.append(p)
             if mixed:
-                self._rewrite(t, mixed, lambda df: df.filter(~drop), "rollback")
-            pure = [f for f, v in verdict.items() if v == "all"]
-            self._delete_files(t, pure)
-            if mixed or pure:
-                changed.add(t)
-        # only the checkpoints of the CHANGED tables flip status: a
-        # partial rollback must keep the other tables' commits visible —
-        # time-travel reads (read(as_of_run=...)) derive visibility from
-        # per-table checkpoint status
+                add += self._rewrite(t, mixed, lambda df: df.filter(~drop),
+                                     lambda tag: verdict(tag) == "all")
+        # only the stages of the CHANGED tables roll back: a partial
+        # rollback must keep the other tables' commits visible to
+        # read(as_of_run=...)
         marker = "" if action_idx is None else f"__a{action_idx}_"
-        for rec in self.checkpoints(run_id):
-            if rec.get("table") in changed and marker in rec["stage"]:
-                rec["status"] = "rolled_back"
-                self.write_checkpoint(run_id, rec["stage"], rec)
-
-    @staticmethod
-    def _footer_match(root: str, f: str, match: dict) -> str:
-        """Which rows of parquet file ``f`` equal every ``match`` column
-        value: ``"all"``, ``"none"`` or ``"some"``, from the footer's
-        per-row-group min/max/null statistics alone (no data scan). A
-        column the file lacks is NULL, which never matches, unless it is a
-        partition column (a ``col=`` directory), whose value the footer
-        does not hold. Missing statistics, or any NULL, count as "some"."""
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(f).metadata
-        if md.num_row_groups == 0:
-            return "none"
-        cols = {md.row_group(0).column(j).path_in_schema: j
-                for j in range(md.num_columns)}
-        segments = os.path.relpath(f, root).split(os.sep)[:-1]
-        groups = set()
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            seen = set()
-            for col, value in match.items():
-                if col not in cols:
-                    partition = any(s.startswith(f"{col}=") for s in segments)
-                    seen.add("some" if partition else "none")
-                    continue
-                st = rg.column(cols[col]).statistics
-                if (st is None or not st.has_min_max or not st.has_null_count
-                        or st.null_count):
-                    seen.add("some")
-                elif st.min == st.max == value:
-                    seen.add("all")
-                elif value < st.min or value > st.max:
-                    seen.add("none")
-                else:
-                    seen.add("some")
-            # the drop predicate is a conjunction over the match columns
-            groups.add("none" if "none" in seen else "some" if "some" in seen else "all")
-        return groups.pop() if len(groups) == 1 else "some"
+        flips = [[run_id, s] for (r, s), (_, rec) in self._stages.items()
+                 if r == run_id and rec.get("table") in changed and marker in s]
+        if changed:
+            self._commit({"add": add, "remove": remove, "rolled_back": flips})
 
     # -- compaction (small-file hygiene) ---------------------------------------
 
     def compact(self, table: str, target_file_bytes: int = 128 * 1024 * 1024) -> dict:
         """Rewrite a table's accumulated small files into ~``target_file_
-        bytes`` files (VERDICT r4, Next round #10): repeated append runs
-        and rollback rewrites each leave their own file set, and at scale
-        the per-file open/footer cost comes to dominate scans. The rewrite
-        PRESERVES the partition layout contract (``<table>__meta.json``)
-        — losing it would silently kill partition pruning — and all row
-        content including ``run_id`` lineage columns, so time-travel reads
-        are unaffected. Before/after file counts, bytes, and row counts
-        (parquet footers — no data scan) are recorded as a lineage
-        checkpoint under the ``__compact__`` run; the payload deliberately
-        carries ``table_compacted`` rather than ``table`` so
-        :meth:`read`'s as-of visibility scan never treats a compaction as
-        a data commit.
+        bytes`` files, as one commit (VERDICT r4, Next round #10): repeated
+        append runs and rollback rewrites each leave their own file set,
+        and at scale the per-file open/footer cost comes to dominate scans.
+        The rewrite PRESERVES the table's recorded partitioning — losing it
+        would silently kill partition pruning — and all row content
+        including ``run_id`` lineage columns, so time-travel reads are
+        unaffected. A rewrite whose footers hold another row count than the
+        log's aborts before its commit, with the table untouched.
+
+        Before/after file counts, bytes and rows (from the log and the new
+        footers — no data scan) are recorded as a stage record of the
+        ``__compact__`` run; it carries ``table_compacted`` rather than
+        ``table``, so :meth:`read`'s as-of visibility never treats a
+        compaction as a data commit.
 
         Partitioned tables repartition BY the partition columns (each
         value collapses to one task -> one file per live partition
         directory); unpartitioned tables repartition to
         ``ceil(bytes / target_file_bytes)``."""
-        path = self.path(table)
-        before = self._parquet_files(path)
-        bytes_before = sum(os.path.getsize(f) for f in before)
-        rows_before = sum(self._footer_histogram(before).values())
+        before = self._files.get(table, {})
+        bytes_before = sum(f["bytes"] for f in before.values())
+        rows_before = sum(f["rows"] for f in before.values())
         parts = self.table_partitioning(table)
 
         def repartition(df: DataFrame) -> DataFrame:
@@ -609,27 +587,34 @@ class GraphStore:
                 return df.repartition(*[F.col(p) for p in parts])
             return df.repartition(max(1, -(-bytes_before // max(target_file_bytes, 1))))
 
-        if before:
-            self._rewrite(table, before, repartition, "compact", expect_rows=rows_before)
-
-        after = self._parquet_files(path)
+        add = self._rewrite(table, list(before), repartition) if before else []
+        rows_after = sum(a["rows"] for a in add)
+        if rows_after != rows_before:
+            shutil.rmtree(self._staging, ignore_errors=True)
+            raise RuntimeError(
+                f"compact({table!r}): rewrite holds {rows_after} rows but the "
+                f"source held {rows_before} — aborting before the commit "
+                "(concurrent append, or a row-dropping read?); table left "
+                "untouched"
+            )
+        n = sum(run == "__compact__" for run, _ in self._stages)
         payload = {
             "run_id": "__compact__",
+            "stage": f"compact_{table}_{n}",
             "op": "compact",
             "table_compacted": table,
             "files_before": len(before),
-            "files_after": len(after),
+            "files_after": len(add),
             "bytes_before": bytes_before,
-            "bytes_after": sum(os.path.getsize(f) for f in after),
+            "bytes_after": sum(a["bytes"] for a in add),
             "row_count": rows_before,
-            "rows_after": sum(self._footer_histogram(after).values()),
+            "rows_after": rows_after,
             "partition_by": parts,
             "status": "done",
             "ts": time.time(),
         }
-        stage = f"compact_{table}_{len(self.checkpoints('__compact__'))}"
-        payload["stage"] = stage
-        self.write_checkpoint("__compact__", stage, payload)
+        self._commit({"add": add, "remove": [{"table": table, "path": p} for p in before],
+                      "stages": [payload]})
         return payload
 
 

@@ -4,7 +4,9 @@
 from __future__ import annotations
 
 import itertools
+import os
 import tempfile
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,11 @@ from pyspark.sql import functions as F
 from tab2neo_spark.datagen import pages_from_documents
 from tab2neo_spark.kg.construct import construct_kg
 from tab2neo_spark.kg.materialize import GraphStore, materialize_kg
+
+
+def _parquet_files(path):
+    """The parquet files under a table directory."""
+    return {os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")}
 
 
 def _mk_kg(spark, sf_dir, n=80):
@@ -243,34 +250,41 @@ def test_upsert_anti_join_scan_is_partition_pruned(spark, tmp_path):
     assert got == {(1, "A"), (2, "A"), (3, "B"), (4, "A")}
 
 
-def test_graphstore_time_travel_read(spark, tmp_path):
+def test_graphstore_time_travel_read(spark, tmp_path, monkeypatch):
     """read(table, as_of_run=...) reconstructs the table as it stood
     after a given run's commit (lineage-driven visibility); a rolled-back
-    run disappears from every snapshot; unknown runs raise."""
+    run disappears from every snapshot; unknown runs raise. Commits are
+    ordered by the log, so a clock that reads the same for every commit
+    (several commits in one tick) changes nothing."""
+    import types
+
     import pytest as _pytest
 
-    from tab2neo_spark.kg.materialize import GraphStore
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    for i, run in enumerate(["r1", "r2", "r3"]):
-        df = spark.createDataFrame(
-            [(run, j) for j in range(3 + i)], "tag string, v int"
-        )
-        store.write_stage(df, "nodes", run, f"stage_{run}")
+    from tab2neo_spark.kg import materialize as M
 
     def tags(df):
         return sorted({r["tag"] for r in df.collect()})
 
-    assert tags(store.read("nodes")) == ["r1", "r2", "r3"]
-    assert tags(store.read("nodes", as_of_run="r1")) == ["r1"]
-    assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
-    assert store.read("nodes", as_of_run="r2").count() == 7  # 3 + 4 rows
+    for clock in ("real", "tied"):
+        if clock == "tied":
+            monkeypatch.setattr(M, "time", types.SimpleNamespace(time=lambda: 1.0))
+        store = M.GraphStore(spark, str(tmp_path / clock))
+        for i, run in enumerate(["r1", "r2", "r3"]):
+            df = spark.createDataFrame(
+                [(run, j) for j in range(3 + i)], "tag string, v int"
+            )
+            store.write_stage(df, "nodes", run, f"stage_{run}")
 
-    store.rollback_run("r3", ["nodes"])
-    assert tags(store.read("nodes")) == ["r1", "r2"]
-    with _pytest.raises(ValueError, match="no surviving commit"):
-        store.read("nodes", as_of_run="r3")
-    assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
+        assert tags(store.read("nodes")) == ["r1", "r2", "r3"]
+        assert tags(store.read("nodes", as_of_run="r1")) == ["r1"]
+        assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
+        assert store.read("nodes", as_of_run="r2").count() == 7  # 3 + 4 rows
+
+        store.rollback_run("r3", ["nodes"])
+        assert tags(store.read("nodes")) == ["r1", "r2"]
+        with _pytest.raises(ValueError, match="no surviving commit"):
+            store.read("nodes", as_of_run="r3")
+        assert tags(store.read("nodes", as_of_run="r2")) == ["r1", "r2"]
 
 
 def test_graphstore_compaction(spark, tmp_path):
@@ -292,11 +306,11 @@ def test_graphstore_compaction(spark, tmp_path):
         return sorted(map(tuple, df.select("tag", "v", "cls", "run_id").collect()))
 
     before_rows = snapshot(store.read("nodes"))
-    n_before = len(store._parquet_files(store.path("nodes")))
+    n_before = len(_parquet_files(store.path("nodes")))
     assert n_before >= 12  # 6 runs x 2 partition values, at least
 
     payload = store.compact("nodes")
-    n_after = len(store._parquet_files(store.path("nodes")))
+    n_after = len(_parquet_files(store.path("nodes")))
     assert n_after < n_before and n_after <= 4
     assert payload["files_before"] == n_before
     assert payload["files_after"] == n_after
@@ -331,26 +345,22 @@ def test_compact_aborts_on_row_loss_and_keeps_original(spark, tmp_path, monkeypa
     from tab2neo_spark.kg import materialize as M
 
     store = M.GraphStore(spark, str(tmp_path / "g"))
-    df = spark.range(100).select(
-        F.col("id").alias("node_id"), F.lit("r1").alias("run_id")
-    )
-    df.write.parquet(store.path("t"))
+    store.write_stage(spark.range(100).select(F.col("id").alias("node_id")), "t", "r1", "s")
 
-    real = M.GraphStore._footer_histogram
+    real = M.GraphStore._staged
 
-    def sabotaged(self, files):
-        h = real(self, files)
-        if any("__compact_tmp" in f for f in files):
-            # simulate a row-losing rewrite (or a concurrent append
-            # having landed in the source after the snapshot read)
-            k = next(iter(h))
-            h[k] = h[k] - 1
+    def sabotaged(self, table):
+        # simulate a row-losing rewrite (or a concurrent append having
+        # landed in the source after the snapshot read)
+        h = real(self, table)
+        k = next(iter(h))
+        h[k] = (h[k][0] - 1, h[k][1])
         return h
 
-    monkeypatch.setattr(M.GraphStore, "_footer_histogram", sabotaged)
-    with pytest.raises(RuntimeError, match="aborting before the swap"):
+    monkeypatch.setattr(M.GraphStore, "_staged", sabotaged)
+    with pytest.raises(RuntimeError, match="aborting before the commit"):
         store.compact("t")
-    monkeypatch.setattr(M.GraphStore, "_footer_histogram", real)
+    monkeypatch.setattr(M.GraphStore, "_staged", real)
     # original directory untouched, readable, full row count
     assert spark.read.parquet(store.path("t")).count() == 100
 
@@ -359,9 +369,8 @@ def test_compact_still_works_when_counts_match(spark, tmp_path):
     from tab2neo_spark.kg.materialize import GraphStore
 
     store = GraphStore(spark, str(tmp_path / "g2"))
-    spark.range(50).selectExpr("id as node_id", "'r1' as run_id").repartition(
-        8
-    ).write.parquet(store.path("t"))
+    store.write_stage(spark.range(50).selectExpr("id as node_id").repartition(8), "t", "r1", "s")
+    assert len(_parquet_files(store.path("t"))) == 8
     out = store.compact("t")
     assert out["row_count"] == 50 and out["rows_after"] == 50
     assert spark.read.parquet(store.path("t")).count() == 50
@@ -437,12 +446,9 @@ def test_checkpoints_and_rollback_keep_to_their_own_run(spark, tmp_path):
         store.write_stage(df, "nodes", run_id, "nodes", partition_by=["class"])
     assert [c["run_id"] for c in store.checkpoints("r")] == ["r"]
 
-    retry_file = store._ckpt_file("r__retry", "nodes")
-    with open(retry_file) as f:
-        retry_before = f.read()
+    retry_before = store.checkpoints("r__retry")
     store.rollback_run("r", ["nodes"])
-    with open(retry_file) as f:
-        assert f.read() == retry_before
+    assert store.checkpoints("r__retry") == retry_before
     own = store.checkpoints("r")
     assert [(c["run_id"], c["status"]) for c in own] == [("r", "rolled_back")]
     assert store.stage_done("r__retry", "nodes")
@@ -499,7 +505,7 @@ def test_fully_rolled_back_table_stays_usable(spark, tmp_path):
 
     write()
     store.rollback_run("r1", ["nodes"])
-    assert store._parquet_files(store.path("nodes")) == set()
+    assert _parquet_files(store.path("nodes")) == set()
     empty = store.read("nodes")
     assert empty.count() == 0
     assert {"node_id", "class", "rdfs_label", "run_id"} <= set(empty.columns)
@@ -538,7 +544,7 @@ def test_rollback_over_compacted_mixed_files(spark, tmp_path):
     expected = rows(before.filter(
         ~((F.col("run_id") == "r2") & F.coalesce(F.col("_action") == 1, F.lit(False)))
         & (F.col("run_id") != "r3")))
-    (arm,) = [f for f in store._parquet_files(store.path("nodes")) if "class=Arm" in f]
+    (arm,) = [f for f in _parquet_files(store.path("nodes")) if "class=Arm" in f]
     arm_mtime = os.stat(arm).st_mtime_ns
 
     store.rollback_action("r2", 1, ["nodes"])
@@ -574,6 +580,35 @@ def test_store_reads_and_uncompacted_rollbacks_run_no_job(spark, tmp_path):
     assert {r["class"] for r in store.read("nodes").collect()} == {"A", "B"}
 
 
+def test_reads_of_a_many_file_table_run_no_listing_job(spark, tmp_path):
+    """Reads list the table directory: on a table of more than 32 files in
+    three partitions, ``read`` and a keyed write's anti-join scan run no
+    job, and the keyed write runs as many jobs as on a table of three
+    files. An explicit list of that many files would make Spark list them
+    in a job."""
+    rows = spark.range(96).select(
+        F.col("id").alias("node_id"), F.concat(F.lit("C"), F.col("id") % 3).alias("class"),
+        F.col("id").cast("string").alias("rdfs_label"))
+    batch = _literal(spark, "C1", [(1, "1"), (100, "x")])
+    jobs = {}
+    for name, layout in (("few", rows.coalesce(1)), ("many", rows.repartition(16))):
+        store = GraphStore(spark, str(tmp_path / name))
+        store.write_stage(layout, "nodes", "r1", "s", partition_by=["class"])
+        n_files = len(_parquet_files(store.path("nodes")))
+        assert n_files > 32 if name == "many" else n_files == 3
+
+        _, n = _jobs(spark, lambda: store.read("nodes"))
+        assert n == 0
+        (_, parts), n = _jobs(
+            spark, lambda: store._existing_for_dedup(store.path("nodes"), batch, ["class"]))
+        assert (parts, n) == (1, 0)
+        payload, jobs[name] = _jobs(spark, lambda: store.write_stage(
+            batch, "nodes", "r2", "s", partition_by=["class"], dedup_key=["node_id"]))
+        assert payload["row_count"] == 1
+        assert store.read("nodes").count() == 97
+    assert jobs["many"] == jobs["few"]
+
+
 def test_keyed_write_into_existing_table_runs_no_inference_job(spark, tmp_path):
     """A keyed write into an existing partitioned table runs the
     partition-value probe and the anti-join write, 4 jobs here, and no
@@ -593,8 +628,6 @@ def test_recorded_schema_is_the_union_of_writes(spark, tmp_path):
     """``_action`` joins the recorded schema when write_method_result first
     writes it: read() exposes it, NULL on the older rows, with the
     partition column last."""
-    import json
-
     from tab2neo_spark.kg.materialize import write_method_result
 
     store = GraphStore(spark, str(tmp_path / "g"))
@@ -607,10 +640,9 @@ def test_recorded_schema_is_the_union_of_writes(spark, tmp_path):
     got = {r["rdfs_label"]: r["_action"] for r in nodes.collect()}
     assert got["a"] is None
     assert got["S1"] == 1 and got["M"] == 2
-    with open(store._meta_file("nodes")) as f:
-        meta = json.load(f)
-    assert meta["partition_by"] == ["class"]
-    assert [c["name"] for c in meta["schema"]["fields"]] == nodes.columns
+    assert store.table_partitioning("nodes") == ["class"]
+    # the log, replayed by a fresh GraphStore, records the same schema
+    assert GraphStore(spark, store.root).read("nodes").columns == nodes.columns
 
 
 # -- keyed writes: partition values from plan constraints ---------------------
@@ -834,3 +866,133 @@ def test_partition_value_cap_holds_on_both_routes(spark, tmp_path):
         .filter(F.col("class").isin(many))
     _, n = store._existing_for_dedup(store.path("nodes"), loose, ["class"])
     assert n == 2
+
+
+# -- crash safety: a killed process, then a reopened store --------------------
+
+
+_KILL_CASES = ("mid_write", "before_commit", "mid_rollback", "mid_compact")
+
+
+def _kill_batch(spark):
+    return spark.createDataFrame([(10, "A", "a10"), (11, "B", "b11"), (12, None, "n12")],
+                                 _NODE_SCHEMA)
+
+
+def _kill_setup(spark, root):
+    """The store every kill case starts from: run r1's nodes; run r2's
+    method result (nodes from actions 1 and 2, an edge from action 2);
+    nodes compacted, so files mix r1 and r2; then run r3's nodes."""
+    from tab2neo_spark.kg.materialize import write_method_result
+    from tab2neo_spark.pipeline.runner import MethodResult
+
+    store = GraphStore(spark, root)
+
+    def nodes(rows):
+        return spark.createDataFrame(rows, _NODE_SCHEMA)
+
+    store.write_stage(nodes([(i, "AB"[i % 2], f"n{i}") for i in range(6)]), "nodes", "r1",
+                      "s", partition_by=["class"], dedup_key=["node_id"])
+    write_method_result(store, MethodResult(
+        df=None, new_nodes=[nodes([(20, "A", "m20"), (21, "C", "m21")]), nodes([(22, "B", "m22")])],
+        node_actions=[1, 2],
+        new_edges=[spark.createDataFrame([(20, "R", 22)], "src long, rel_type string, dst long")],
+        edge_actions=[2]), "r2", "m")
+    store.compact("nodes")
+    store.write_stage(nodes([(7, "B", "n7"), (30, "D", "n30")]), "nodes", "r3", "s",
+                      partition_by=["class"], dedup_key=["node_id"])
+    return store
+
+
+def _kill_call(case, store, batch):
+    """The call each case is killed in; re-running it is the resume."""
+    if case in ("mid_write", "before_commit"):
+        store.write_stage(batch, "nodes", "r4", "s", partition_by=["class"],
+                          dedup_key=["node_id"])
+    elif case == "mid_rollback":
+        store.rollback_run("r2", ["nodes", "edges"])
+    else:
+        store.compact("nodes")
+
+
+def _killed_child(case, root):
+    """Run in a subprocess of its own process group: make ``case``'s call on
+    the store at ``root`` and SIGKILL the group (driver, JVM) at the case's
+    kill point."""
+    import signal
+
+    from pyspark.sql.functions import udf
+
+    from tab2neo_spark.session import get_spark
+
+    group = os.getpgrp()
+
+    def die(*_a, **_k):
+        os.killpg(group, signal.SIGKILL)
+
+    spark = get_spark(app_name="graphstore_kill", cores=1, shuffle_partitions=2,
+                      extra_conf={"spark.driver.memory": "1g"})
+    store = GraphStore(spark, root)
+    batch = _kill_batch(spark)
+    if case == "mid_write":  # inside the write job, from its Python worker
+        def label(s):
+            if s == "n12":
+                die()
+                os.killpg(0, signal.SIGKILL)  # the worker's own group
+            return s
+
+        batch = batch.withColumn("rdfs_label", udf(label)("rdfs_label"))
+    elif case == "before_commit":  # the files are staged, no version claimed
+        GraphStore._commit = die
+    elif case == "mid_rollback":  # after the commit, among the deletes
+        remove, removed = os.remove, []
+
+        def remove_once(f):
+            if f.endswith(".parquet") and removed:
+                die()
+            removed.append(f)
+            remove(f)
+
+        os.remove = remove_once
+    else:  # compaction's new files are in, its originals not yet deleted
+        GraphStore._delete_files = die
+    _kill_call(case, store, batch)
+    raise AssertionError(f"{case}: the kill point was never reached")
+
+
+def _table_rows(store, table):
+    df = store.read(table)
+    return Counter(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+@pytest.mark.parametrize("case", _KILL_CASES)
+def test_killed_call_recovers_on_open(spark, tmp_path, case):
+    """A process SIGKILLed inside a write, a rollback or a compaction
+    leaves a store that, reopened and resumed (the same call again), holds
+    row for row what a never-killed run holds, with no duplicate key. A
+    kill after the commit needs no resume: opening the store finishes it."""
+    import subprocess
+    import signal
+    import sys
+
+    ref = _kill_setup(spark, str(tmp_path / "ref"))
+    _kill_call(case, ref, _kill_batch(spark))
+    root = str(tmp_path / "g")
+    _kill_setup(spark, root)
+    here = os.path.dirname(os.path.abspath(__file__))
+    child = subprocess.run(
+        [sys.executable, "-c",
+         f"import sys; sys.path[:0] = [{os.path.dirname(here)!r}, {here!r}]; "
+         f"import test_materialize as t; t._killed_child({case!r}, {root!r})"],
+        start_new_session=True, capture_output=True, timeout=600)
+    assert child.returncode == -signal.SIGKILL, child.stderr.decode()[-3000:]
+
+    store = GraphStore(spark, root)
+    if case in ("mid_rollback", "mid_compact"):
+        assert all(_table_rows(store, t) == _table_rows(ref, t) for t in ("nodes", "edges"))
+    _kill_call(case, store, _kill_batch(spark))
+    assert not os.path.exists(os.path.join(root, "_staging"))
+    for table, key in (("nodes", ["node_id"]), ("edges", ["src", "rel_type", "dst"])):
+        assert _table_rows(store, table) == _table_rows(ref, table)
+        keys = Counter(tuple(r) for r in store.read(table).select(*key).collect())
+        assert set(keys.values()) <= {1}

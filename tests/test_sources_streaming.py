@@ -168,23 +168,6 @@ def test_windowed_crawl_stats_stream(spark, sf_dir, tmp_path):
     assert got == 100
 
 
-def test_source_catalog_lifecycle(spark, sf_dir, tmp_path):
-    """S3/S5: register -> query -> delete one domain -> delete all."""
-    from tab2neo_spark.sources.catalog import SourceCatalog
-
-    cat = SourceCatalog(spark, str(tmp_path / "cat"))
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cat.register(region, sf_dir, "region.parquet", "REGION")
-    cat.register(nation, sf_dir, "nation.parquet", "NATION")
-    assert cat.tables().count() == 2
-    assert set(cat.columns("NATION")) == {"n_nationkey", "n_name", "n_regionkey"}
-    cat.delete_file_data(sf_dir, "REGION")
-    assert [r["domain"] for r in cat.tables().collect()] == ["NATION"]
-    cat.delete_source_data()
-    assert cat.read().count() == 0
-
-
 def test_stateful_streaming_sessionization(spark, tmp_path):
     """applyInPandasWithState: streamed sessions equal the batch
     lag/cumsum sessionization for fully-closed sessions."""
